@@ -2,7 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.DocBuilder
-import graft.engine.{DocOut, KvOut, LineOut, MultiOut, PairOut, Pipeline}
+import graft.engine.{DocOut, Pipeline}
 import graft.synth.{CorpusGen, PageRow}
 
 /** Materializes the deterministic synthetic corpus (pages + oracle goldens)
@@ -44,9 +44,12 @@ object Corpus {
     }
   }
 
+  /** The corpus cache lives under the working directory's `target/`, so
+    * every checkout (and every copy of one) keeps its own cache.
+    */
   def corpusDir(sfDir: String): String = {
     val base = new java.io.File(sfDir).getName
-    s"/root/repo/target/corpus/$Version/$base"
+    new java.io.File(sys.props("user.dir"), s"target/corpus/$Version/$base").getPath
   }
 
   def pagesPath(sfDir: String): String = s"${corpusDir(sfDir)}/pages.parquet"
@@ -75,25 +78,10 @@ object Corpus {
   def goldenFor(docIdx: Long, buckets: Int): DocOut = {
     val (ann, page) = CorpusGen.pageFor(docIdx)
     val sample = DocBuilder.build(ann)
-    val d = DocBuilder.decodeSample(sample)
-    DocOut(
-      url = page.url,
-      host = Pipeline.hostOf(page.url),
-      lang = page.lang,
-      bucket = Pipeline.bucketOf(page.url, buckets),
-      nTokens = sample.tokens.length,
-      nLines = d.lines.length,
-      nKv = d.kvPairs.length,
+    DocOut.of(page.url, Pipeline.hostOf(page.url), page.lang,
+      Pipeline.bucketOf(page.url, buckets), sample.tokens.length,
       kernelUs = 0L, // oracle path: no kernel timing
-      text = d.extractedText,
-      lines = d.lines.map(l => LineOut(l.text, l.box)),
-      kv = d.kvPairs.map(p => KvOut(p.key, p.value, p.keyBox, p.valueBox)),
-      lineExtraction = d.lineExtraction.map(p => PairOut(p._1, p._2)),
-      entHead = d.entHead.map(m => MultiOut(m._1, m._2)),
-      entTail = d.entTail.map(m => MultiOut(m._1, m._2)),
-      groupHead = d.groupHead.map(p => PairOut(p._1, p._2)),
-      groupTail = d.groupTail.map(p => PairOut(p._1, p._2))
-    )
+      DocBuilder.decodeSample(sample))
   }
 
   /** Deterministic per-document spot table for the windowed parse-spots
@@ -136,10 +124,12 @@ object Corpus {
       // of ~120 KB at sf0.1; every pages-backed query re-paid the listing +
       // per-file footer reads on each scan (x9 reads pages three times). A
       // range-partition on (lang, salt) with 4 deterministic salts per lang
-      // yields exactly one file per (lang, salt) — 32 files, which both cuts
-      // the per-scan open overhead 8x and keeps the scan splittable into
-      // defaultParallelism tasks (Spark's bytesPerCore sizing: 32 files of
-      // ~1 MB still plan as 32 splits at the bench's 128m maxPartitionBytes).
+      // yields about one file per (lang, salt) — about 32 files (range
+      // partitioning samples its boundaries, so the count is not exact),
+      // which both cuts the per-scan open overhead 8x and keeps the scan
+      // splittable into defaultParallelism tasks (Spark's bytesPerCore
+      // sizing: 32 files of ~1 MB still plan as 32 splits at the bench's
+      // 128m maxPartitionBytes).
       // The salt is content-derived (xxhash64 of the url), not rand() —
       // deterministic under task retry (guide §2.5).
       import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}

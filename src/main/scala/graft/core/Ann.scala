@@ -2,8 +2,9 @@ package graft.core
 
 /** Annotation-side data model, mirroring the reference's SIBR JSON schema
   * (/root/reference/docs/documentation.md:196-242) recast with `uid` = url.
+  * `bbox` holds 4 values (x0, y0, x1, y1) or an 8-value corner quad.
   */
-final case class AnnLine(id: Int, text: String, bbox: Vector[Int])
+final case class AnnLine(id: Int, text: String, bbox: Seq[Int])
 
 final case class AnnEntity(id: Int, label: String, lines: Vector[AnnLine])
 

@@ -10,21 +10,38 @@ package graft.core
   */
 object Boxes {
 
+  /** A two-point box as a Seq over one int array: no boxed Integers, and
+    * [[graft.engine.DocOut]]'s encoder copies it out as a primitive array.
+    * Equal to any Seq of the same four values, a Vector included.
+    */
+  def box4(x0: Int, y0: Int, x1: Int, y1: Int): Seq[Int] =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(Array(x0, y0, x1, y1))
+
   /** 8-value quad -> [min x, min y, max x, max y]; 4-value passes through. */
   def boxTwoPointConvert(box: Seq[Int]): Vector[Int] = {
     if (box.length == 4) return box.toVector
-    require(box.length == 8, s"Box should contain 4 or 8 values, got ${box.length}")
-    var minX, minY = Int.MaxValue
-    var maxX, maxY = Int.MinValue
-    var i = 0
-    while (i < 8) {
-      val v = box(i)
-      if (i % 2 == 0) { if (v < minX) minX = v; if (v > maxX) maxX = v }
-      else { if (v < minY) minY = v; if (v > maxY) maxY = v }
-      i += 1
-    }
-    Vector(minX, minY, maxX, maxY)
+    val out = new Array[Int](4)
+    twoPointInto(box, out, 0)
+    out.toVector
   }
+
+  /** [[boxTwoPointConvert]] written as four ints at out(at..at+3). */
+  def twoPointInto(box: Seq[Int], out: Array[Int], at: Int): Unit =
+    if (box.length == 4) {
+      out(at) = box(0); out(at + 1) = box(1); out(at + 2) = box(2); out(at + 3) = box(3)
+    } else {
+      require(box.length == 8, s"Box should contain 4 or 8 values, got ${box.length}")
+      var minX, minY = Int.MaxValue
+      var maxX, maxY = Int.MinValue
+      var i = 0
+      while (i < 8) {
+        val v = box(i)
+        if (i % 2 == 0) { if (v < minX) minX = v; if (v > maxX) maxX = v }
+        else { if (v < minY) minY = v; if (v > maxY) maxY = v }
+        i += 1
+      }
+      out(at) = minX; out(at + 1) = minY; out(at + 2) = maxX; out(at + 3) = maxY
+    }
 
   @inline private def normCoord(v: Int, d: Int): Int = {
     val t = ((v.toDouble / d) * 1000).toInt // Python int() truncation
@@ -52,24 +69,6 @@ object Boxes {
     (x0.toLong << 48) | (y0.toLong << 32) | (x1.toLong << 16) | y1.toLong
   }
 
-  /** [[mergeBbox]] over boxes(s..eIncl) without materializing the slice —
-    * the decode chain merges a range per line/chain step on the hot path.
-    */
-  def mergeBboxRange(boxes: IndexedSeq[Vector[Int]], s: Int, eIncl: Int): Vector[Int] = {
-    var minX, minY = Int.MaxValue
-    var maxX, maxY = Int.MinValue
-    var k = s
-    while (k <= eIncl) {
-      val b = boxes(k)
-      if (b(0) < minX) minX = b(0)
-      if (b(1) < minY) minY = b(1)
-      if (b(2) > maxX) maxX = b(2)
-      if (b(3) > maxY) maxY = b(3)
-      k += 1
-    }
-    Vector(minX, minY, maxX, maxY)
-  }
-
   /** Component-wise min/min/max/max over a non-empty box list. */
   def mergeBbox(boxes: Seq[Seq[Int]]): Vector[Int] = {
     var minX, minY = Int.MaxValue
@@ -93,8 +92,19 @@ object Boxes {
     * a stable sort is observationally identical.
     */
   def sortBoxes(boxes: scala.collection.IndexedSeq[Seq[Int]]): Vector[Int] = {
-    val n = boxes.length
-    if (n == 0) return Vector.empty
+    val flat = new Array[Int](4 * boxes.length)
+    var i = 0
+    while (i < boxes.length) {
+      val b = boxes(i)
+      flat(4 * i) = b(0); flat(4 * i + 1) = b(1); flat(4 * i + 2) = b(2); flat(4 * i + 3) = b(3)
+      i += 1
+    }
+    sortBoxesFlat(flat, boxes.length).toVector
+  }
+
+  /** [[sortBoxes]] over n boxes stored 4 ints each in `flat`. */
+  def sortBoxesFlat(flat: Array[Int], n: Int): Array[Int] = {
+    if (n == 0) return Array.emptyIntArray
     // doubled centers as exact ints: sorting by b0+b2 == sorting by the
     // center-x double (monotone, exact), and (cy2a - cy2b)/2.0 == the
     // reference's py gap (int/2.0 arithmetic is exact) — so the packed-long
@@ -105,10 +115,9 @@ object Boxes {
     var hSum = 0.0
     var i = 0
     while (i < n) {
-      val b = boxes(i)
-      cx2(i) = b(0) + b(2)
-      cy2(i) = b(1) + b(3)
-      hSum += (b(3) - b(1))
+      cx2(i) = flat(4 * i) + flat(4 * i + 2)
+      cy2(i) = flat(4 * i + 1) + flat(4 * i + 3)
+      hSum += (flat(4 * i + 3) - flat(4 * i + 1))
       i += 1
     }
     val mH = hSum / (2.0 * n)
@@ -139,6 +148,6 @@ object Boxes {
       }
       start = end
     }
-    res.toVector
+    res
   }
 }

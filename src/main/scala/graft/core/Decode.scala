@@ -4,12 +4,12 @@ package graft.core
 final case class KvPair(
     key: String,
     value: String,
-    keyBox: Vector[Int],
-    valueBox: Vector[Int]
+    keyBox: Seq[Int],
+    valueBox: Seq[Int]
 )
 
 /** One decoded line (/root/reference/pipeline/decode.py:205-212). */
-final case class DecodedLine(text: String, box: Vector[Int])
+final case class DecodedLine(text: String, box: Seq[Int])
 
 /** The full per-document decode result: the 7-tuple returned by
   * `sample_decode_peneo` (/root/reference/pipeline/decode.py:370-378), with
@@ -28,7 +28,19 @@ final case class DecodedDoc(
   /** Byte-identity target: the extracted main-content text of the page —
     * decoded lines joined by a single '\n'. Per-url invariant vs goldens.
     */
-  def extractedText: String = lines.iterator.map(_.text).mkString("\n")
+  def extractedText: String = lines.length match {
+    case 0 => ""
+    case 1 => lines(0).text
+    case n =>
+      var len = n - 1
+      val it = lines.iterator
+      while (it.hasNext) len += it.next().text.length
+      val sb = new java.lang.StringBuilder(len)
+      val it2 = lines.iterator
+      sb.append(it2.next().text)
+      while (it2.hasNext) sb.append('\n').append(it2.next().text)
+      sb.toString
+  }
 }
 
 /** Exact port of the decode algebra in
@@ -48,23 +60,50 @@ object Decode {
     * gates.
     */
   sealed trait TokView {
-    def append(sb: java.lang.StringBuilder, k: Int): Unit
-    def bL(k: Int): Int
-    def bT(k: Int): Int
-    def bR(k: Int): Int
-    def bB(k: Int): Int
+    /** Appends the text of tokens s..eIncl. */
+    def appendRange(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit
+
+    /** The text of tokens s..eIncl. */
+    def text(s: Int, eIncl: Int): String = {
+      val sb = new java.lang.StringBuilder
+      appendRange(sb, s, eIncl)
+      sb.toString
+    }
+
+    /** Widens acc = (minX, minY, maxX, maxY) by the boxes of tokens s..eIncl. */
+    def mergeBox(s: Int, eIncl: Int, acc: Array[Int]): Unit
+  }
+
+  @inline private def widen(acc: Array[Int], l: Int, t: Int, r: Int, b: Int): Unit = {
+    if (l < acc(0)) acc(0) = l
+    if (t < acc(1)) acc(1) = t
+    if (r > acc(2)) acc(2) = r
+    if (b > acc(3)) acc(3) = b
   }
 
   final class SeqTokView(text: IndexedSeq[String], bbox: IndexedSeq[Vector[Int]])
       extends TokView {
-    def append(sb: java.lang.StringBuilder, k: Int): Unit = sb.append(text(k))
-    def bL(k: Int): Int = bbox(k)(0)
-    def bT(k: Int): Int = bbox(k)(1)
-    def bR(k: Int): Int = bbox(k)(2)
-    def bB(k: Int): Int = bbox(k)(3)
+    def appendRange(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit = {
+      var k = s
+      while (k <= eIncl) { sb.append(text(k)); k += 1 }
+    }
+    def mergeBox(s: Int, eIncl: Int, acc: Array[Int]): Unit = {
+      var k = s
+      while (k <= eIncl) {
+        val b = bbox(k)
+        widen(acc, b(0), b(1), b(2), b(3))
+        k += 1
+      }
+    }
   }
 
-  /** @param lineTexts kept-line text buffer; @param sLineText per-sorted-line
+  /** Works a line run at a time: a line's tokens are contiguous slices
+    * of its text (token k ends where token k + 1 starts) and share its
+    * box, so a token range is one region of text and one box per line it
+    * touches — and a range that is exactly one whole line is that line's
+    * String, no copy.
+    *
+    * @param lineTexts kept-line text buffer; @param sLineText per-sorted-line
     * index into it; @param boxO flat 4-per-sorted-line original boxes;
     * @param tokSLine/@param tokStart/@param tokEnd per-token (sorted line,
     * char range) triple.
@@ -73,12 +112,39 @@ object Decode {
       lineTexts: Array[String], sLineText: Array[Int], boxO: Array[Int],
       tokSLine: Array[Int], tokStart: Array[Int], tokEnd: Array[Int]
   ) extends TokView {
-    def append(sb: java.lang.StringBuilder, k: Int): Unit =
-      sb.append(lineTexts(sLineText(tokSLine(k))), tokStart(k), tokEnd(k))
-    def bL(k: Int): Int = boxO(tokSLine(k) * 4)
-    def bT(k: Int): Int = boxO(tokSLine(k) * 4 + 1)
-    def bR(k: Int): Int = boxO(tokSLine(k) * 4 + 2)
-    def bB(k: Int): Int = boxO(tokSLine(k) * 4 + 3)
+    /** Last token of k's line run that is still <= eIncl. */
+    @inline private def runEnd(k: Int, eIncl: Int): Int = {
+      var r = k
+      while (r < eIncl && tokSLine(r + 1) == tokSLine(k)) r += 1
+      r
+    }
+
+    def appendRange(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit = {
+      var k = s
+      while (k <= eIncl) {
+        val r = runEnd(k, eIncl)
+        sb.append(lineTexts(sLineText(tokSLine(k))), tokStart(k), tokEnd(r))
+        k = r + 1
+      }
+    }
+
+    override def text(s: Int, eIncl: Int): String =
+      if (s > eIncl) ""
+      else if (runEnd(s, eIncl) < eIncl) super.text(s, eIncl)
+      else {
+        val line = lineTexts(sLineText(tokSLine(s)))
+        if (tokStart(s) == 0 && tokEnd(eIncl) == line.length) line
+        else line.substring(tokStart(s), tokEnd(eIncl))
+      }
+
+    def mergeBox(s: Int, eIncl: Int, acc: Array[Int]): Unit = {
+      var k = s
+      while (k <= eIncl) {
+        val o = tokSLine(k) * 4
+        widen(acc, boxO(o), boxO(o + 1), boxO(o + 2), boxO(o + 3))
+        k = runEnd(k, eIncl) + 1
+      }
+    }
   }
 
   /** @param text      token-parallel fetched substrings; `"".join` slices of
@@ -205,30 +271,22 @@ object Decode {
       entTail: IntMultiOrdered,
       entHeadIter: ((Int, Int) => Unit) => Unit
   ): DecodedDoc = {
-    @inline def sliceText(s: Int, eIncl: Int): String = {
-      val sb = new java.lang.StringBuilder
-      var k = s
-      while (k <= eIncl) { view.append(sb, k); k += 1 }
-      sb.toString
+    // running (minX, minY, maxX, maxY) box, reset per line or chain
+    @inline def emptyBox(acc: Array[Int]): Array[Int] = {
+      acc(0) = Int.MaxValue; acc(1) = Int.MaxValue
+      acc(2) = Int.MinValue; acc(3) = Int.MinValue
+      acc
     }
-    @inline def sliceBox(s: Int, eIncl: Int): Vector[Int] = {
-      var minX, minY = Int.MaxValue
-      var maxX, maxY = Int.MinValue
-      var k = s
-      while (k <= eIncl) {
-        if (view.bL(k) < minX) minX = view.bL(k)
-        if (view.bT(k) < minY) minY = view.bT(k)
-        if (view.bR(k) > maxX) maxX = view.bR(k)
-        if (view.bB(k) > maxY) maxY = view.bB(k)
-        k += 1
-      }
-      Vector(minX, minY, maxX, maxY)
-    }
+    @inline def boxVec(acc: Array[Int]): Seq[Int] = Boxes.box4(acc(0), acc(1), acc(2), acc(3))
+    val acc = new Array[Int](4)
 
     // --- line assembly (decode.py:205-212) ---
-    val lines = Vector.newBuilder[DecodedLine]
+    val lineArr = new Array[AnyRef](lineExtraction.size)
+    var nLine = 0
     lineExtraction.foreachPair { (s, e) =>
-      lines += DecodedLine(sliceText(s, e), sliceBox(s, e))
+      view.mergeBox(s, e, emptyBox(acc))
+      lineArr(nLine) = DecodedLine(view.text(s, e), boxVec(acc))
+      nLine += 1
     }
 
     // one chain walk (identical for key and value, decode.py:248-350):
@@ -238,33 +296,28 @@ object Decode {
     //
     // The reference appends per-segment text slices / merged boxes to lists
     // and finishes with "".join + merge_bbox; both folds are associative, so
-    // the walk accumulates ONE text builder and ONE running min/max box —
+    // the walk accumulates one running box and the text of its segments —
     // byte-identical output, none of the per-segment String/Vector wrappers
-    // on this hot path.
-    final class Walk(headIdx: Int, firstTailIdx: Int) {
-      val sb = new java.lang.StringBuilder
-      var minX: Int = Int.MaxValue
-      var minY: Int = Int.MaxValue
-      var maxX: Int = Int.MinValue
-      var maxY: Int = Int.MinValue
-      var currHead: Int = headIdx
-      var currTail: Int = firstTailIdx
+    // on this hot path. A one-segment chain (the common case) reads its
+    // text straight from the view; a builder starts at the second segment.
+    final class Walk(s0: Int, e0: Int) {
+      val box: Array[Int] = emptyBox(new Array[Int](4))
+      private var sb: java.lang.StringBuilder = null
+      var currHead: Int = s0
+      var currTail: Int = e0
+      view.mergeBox(s0, e0, box)
       def addSegment(s: Int, eIncl: Int): Unit = {
-        var k = s
-        while (k <= eIncl) {
-          view.append(sb, k)
-          if (view.bL(k) < minX) minX = view.bL(k)
-          if (view.bT(k) < minY) minY = view.bT(k)
-          if (view.bR(k) > maxX) maxX = view.bR(k)
-          if (view.bB(k) > maxY) maxY = view.bB(k)
-          k += 1
+        if (sb == null) {
+          sb = new java.lang.StringBuilder
+          view.appendRange(sb, s0, e0)
         }
+        view.appendRange(sb, s, eIncl)
+        view.mergeBox(s, eIncl, box)
       }
-      def box: Vector[Int] = Vector(minX, minY, maxX, maxY)
+      def text: String = if (sb == null) view.text(s0, e0) else sb.toString
     }
     def walkChain(headIdx: Int, firstTailIdx: Int): Walk = {
       val w = new Walk(headIdx, firstTailIdx)
-      w.addSegment(headIdx, firstTailIdx)
       var nextHead = groupHead.getOrMinus1(w.currHead)
       var numOp = 0
       var continue = true
@@ -303,10 +356,10 @@ object Decode {
         // the key chain tail (decode.py:352-359)
         if (entTail.containsValue(kw.currTail, vw.currTail)) {
           kvPairs += KvPair(
-            key = TextNorm.pyStrip(kw.sb.toString),
-            value = TextNorm.pyStrip(vw.sb.toString),
-            keyBox = kw.box,
-            valueBox = vw.box
+            key = TextNorm.pyStrip(kw.text),
+            value = TextNorm.pyStrip(vw.text),
+            keyBox = boxVec(kw.box),
+            valueBox = boxVec(vw.box)
           )
         }
       } // else: head not in line-extraction map: skip (decode.py:236-243)
@@ -314,7 +367,7 @@ object Decode {
 
     DecodedDoc(
       kvPairs = kvPairs.result(),
-      lines = lines.result(),
+      lines = Vecs.adopt(lineArr),
       lineExtraction = lineExtraction.toVector,
       entHead = entHead.toVectorMulti,
       entTail = entTail.toVectorMulti,

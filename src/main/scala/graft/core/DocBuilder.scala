@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.collection.mutable
-
 /** The token-parallel document sample: the output of the pre-processing +
   * label-generation stages (B/C blocks of SURVEY.md §2), mirroring the dict
   * returned by /root/reference/data/datasets/sibr.py:447-460.
@@ -115,7 +113,8 @@ object DocBuilder {
   final val DefaultMaxTokenLen = 511
 
   private final class LineInfo(
-      val coords: Vector[Int],
+      // the line's two-point box (x0, y0, x1, y1)
+      val x0: Int, val y0: Int, val x1: Int, val y1: Int,
       val text: String,
       val ends: Array[Int], // token END offsets into text (Tokenizer.tokenizeEnds)
       val textIdx: Int,     // index of text in the kept line-text buffer
@@ -178,30 +177,39 @@ object DocBuilder {
     (sample, trace.get)
   }
 
+  /** Packed-long spot channel of at most `cap` spots; seq = emission index
+    * within the channel (exactly the k canonicalize's tuple path would
+    * assign).
+    */
+  private final class SpotsBuilder(cap: Int) {
+    private val b = new Array[Long](cap)
+    private var n = 0
+    def add(i: Int, j: Int, tag: Int): Unit = { b(n) = Spots.pack(i, j, n, tag); n += 1 }
+    def result(): Array[Long] = if (n == cap) b else java.util.Arrays.copyOf(b, n)
+  }
+
+  @inline private def trim(a: Array[Int], n: Int): Array[Int] =
+    if (a.length == n) a else java.util.Arrays.copyOf(a, n)
+
   /** wantTrace=false keeps the hot extraction path allocation-free: the
     * trace copies every internal set/map, which only the executed-reference
     * spec needs.
     */
-  /** Growable packed-long spot channel; seq = emission index within the
-    * channel (exactly the k canonicalize's tuple path would assign).
-    */
-  private final class SpotsBuilder {
-    private val b = mutable.ArrayBuilder.make[Long]
-    private var n = 0
-    def add(i: Int, j: Int, tag: Int): Unit = { b += Spots.pack(i, j, n, tag); n += 1 }
-    def result(): Array[Long] = b.result()
-  }
-
   private def buildImpl(doc: AnnDoc, maxTokenLen: Int,
       wantTrace: Boolean): (DocSample, Option[BuildTrace]) = {
     // capacity hints: the default-capacity growth chain re-allocated every
     // map's arrays ~2x over per document (geometric churn); line/entity
     // counts are known up front from the annotation
-    val nEnt = doc.entities.length
+    val entities = doc.entities
+    val nEnt = entities.length
     var nLines = 0
-    doc.entities.foreach(e => nLines += e.lines.length)
-    val allOrigLines = new mutable.ArrayBuffer[LineInfo](math.max(8, nLines))
-    val allOrigBoxes = new mutable.ArrayBuffer[Vector[Int]](math.max(8, nLines))
+    var ei = 0
+    while (ei < nEnt) { nLines += entities(ei).lines.length; ei += 1 }
+    // kept lines in annotation order, with their boxes 4 ints each
+    val allOrigLines = new Array[LineInfo](nLines)
+    val allOrigBoxes = new Array[Int](4 * nLines)
+    var nKept = 0
+    var nKeptTokens = 0
     // open-addressing primitive maps (value 1 = set membership): the boxed
     // HashMap/HashSet versions cost an entry object + boxed key per put on
     // the per-doc hot path (-1 is the maps' empty sentinel, hence the
@@ -211,7 +219,7 @@ object DocBuilder {
     // entity text is a SLICE of the global kept-line text buffer, built
     // lazily: eagerly mkString-ing every entity cost ~6 KB/doc and only
     // relation endpoints (and the trace) ever read the text
-    val lineTexts = new mutable.ArrayBuffer[String](math.max(8, nLines))
+    val lineTexts = new Array[String](nLines) // kept lines' texts, nKept of them
     val entityTextStart = new IntIntOrdered(nEnt)
     val entityTextEnd = new IntIntOrdered(nEnt)
     def entityTextOf(id: Int): String = {
@@ -229,11 +237,16 @@ object DocBuilder {
     val entityLastLine = new IntIntOrdered(nEnt)
     val lineIdToEntityId = new IntIntOrdered(nLines)
 
-    doc.entities.foreach { entity =>
+    ei = 0
+    while (ei < nEnt) {
+      val entity = entities(ei)
       var firstLineFlag = true
-      val entityTextStartIdx = lineTexts.length
+      val entityTextStartIdx = nKept
       require(entity.id >= 0, s"negative entity id ${entity.id}")
-      entity.lines.foreach { line =>
+      val lines = entity.lines
+      var li = 0
+      while (li < lines.length) {
+        val line = lines(li)
         require(line.id >= 0, s"negative line id ${line.id}")
         val lineText = normalizeLineText(line.text)
         // offset tokenization: per-token Strings never materialize on the
@@ -242,44 +255,53 @@ object DocBuilder {
         if (ends.isEmpty) {
           emptyLine.put(line.id, 1)
         } else {
-          val tIdx = lineTexts.length
-          lineTexts += lineText
-          val b = Boxes.boxTwoPointConvert(line.bbox)
-          allOrigLines += new LineInfo(b, lineText, ends, tIdx, entity.label, entity.id, line.id)
-          allOrigBoxes += b
+          lineTexts(nKept) = lineText
+          val o = 4 * nKept
+          Boxes.twoPointInto(line.bbox, allOrigBoxes, o)
+          allOrigLines(nKept) = new LineInfo(allOrigBoxes(o), allOrigBoxes(o + 1),
+            allOrigBoxes(o + 2), allOrigBoxes(o + 3), lineText, ends, nKept, entity.label,
+            entity.id, line.id)
+          nKept += 1
+          nKeptTokens += ends.length
           if (firstLineFlag) entityFirstLine.put(entity.id, line.id)
           firstLineFlag = false
           lineIdToEntityId.put(line.id, entity.id)
         }
+        li += 1
       }
-      if (allOrigLines.isEmpty) {
+      if (nKept == 0) {
         emptyEntity.put(entity.id, 1)
       } else {
-        entityLastLine.put(entity.id, allOrigLines.last.origLineId)
+        entityLastLine.put(entity.id, allOrigLines(nKept - 1).origLineId)
         // reference quirk preserved: ANY entity closing after the first
         // globally-kept line records its text — possibly the empty slice
         entityTextStart.put(entity.id, entityTextStartIdx)
-        entityTextEnd.put(entity.id, lineTexts.length)
+        entityTextEnd.put(entity.id, nKept)
       }
+      ei += 1
     }
 
-    val sortedIdx = Boxes.sortBoxes(allOrigBoxes)
-    val sortedLines: Vector[LineInfo] = sortedIdx.map(allOrigLines(_))
+    val sortedLines: Array[LineInfo] =
+      Boxes.sortBoxesFlat(allOrigBoxes, nKept).map(allOrigLines(_))
 
     // compact sample storage: per-sorted-line (textIdx, norm box, orig box)
-    // + per-token (sorted line, char range) — no per-token objects
-    val sLineTextB = mutable.ArrayBuilder.make[Int]
-    val sLineBoxNB = mutable.ArrayBuilder.make[Int]
-    val sLineBoxOB = mutable.ArrayBuilder.make[Int]
-    val tokSLineB = mutable.ArrayBuilder.make[Int]
-    val tokStartB = mutable.ArrayBuilder.make[Int]
-    val tokEndB = mutable.ArrayBuilder.make[Int]
+    // + per-token (sorted line, char range) — no per-token objects. Sized
+    // for every kept line and token (truncation keeps fewer than
+    // maxTokenLen tokens), then trimmed.
+    val sLineText = new Array[Int](nKept)
+    val sLineBoxN = new Array[Int](4 * nKept)
+    val sLineBoxO = new Array[Int](4 * nKept)
+    val tokCap = math.max(0, math.min(nKeptTokens, maxTokenLen))
+    val tokSLine = new Array[Int](tokCap)
+    val tokStart = new Array[Int](tokCap)
+    val tokEnd = new Array[Int](tokCap)
     var nSLines = 0
-    val lineExtractionSpots = new SpotsBuilder
-    val entHeadSpots = new SpotsBuilder
-    val entTailSpots = new SpotsBuilder
-    val groupHeadSpots = new SpotsBuilder
-    val groupTailSpots = new SpotsBuilder
+    // one spot per in-scope Q/A line, kv relation, or grouping relation
+    val lineExtractionSpots = new SpotsBuilder(nKept)
+    val entHeadSpots = new SpotsBuilder(doc.kvEntity.length)
+    val entTailSpots = new SpotsBuilder(doc.kvEntity.length)
+    val groupHeadSpots = new SpotsBuilder(doc.lineGrouping.length)
+    val groupTailSpots = new SpotsBuilder(doc.lineGrouping.length)
 
     var currTokenIdx = 0
     val lineOrigToSorted = new IntIntOrdered(nLines)
@@ -297,23 +319,24 @@ object DocBuilder {
       } else {
         inScopeEntityId.put(ln.origEntityId, 1)
         inScopeLineId.put(ln.origLineId, 1)
-        val c = ln.coords
-        val norm = Boxes.normalizeBboxPacked(c(0), c(1), c(2), c(3),
+        val norm = Boxes.normalizeBboxPacked(ln.x0, ln.y0, ln.x1, ln.y1,
           doc.width, doc.height)
         val sIdx = nSLines
-        sLineTextB += ln.textIdx
-        sLineBoxNB += ((norm >>> 48) & 0xFFFF).toInt
-        sLineBoxNB += ((norm >>> 32) & 0xFFFF).toInt
-        sLineBoxNB += ((norm >>> 16) & 0xFFFF).toInt
-        sLineBoxNB += (norm & 0xFFFF).toInt
-        sLineBoxOB += ln.coords(0); sLineBoxOB += ln.coords(1)
-        sLineBoxOB += ln.coords(2); sLineBoxOB += ln.coords(3)
+        val o = 4 * sIdx
+        sLineText(sIdx) = ln.textIdx
+        sLineBoxN(o) = ((norm >>> 48) & 0xFFFF).toInt
+        sLineBoxN(o + 1) = ((norm >>> 32) & 0xFFFF).toInt
+        sLineBoxN(o + 2) = ((norm >>> 16) & 0xFFFF).toInt
+        sLineBoxN(o + 3) = (norm & 0xFFFF).toInt
+        sLineBoxO(o) = ln.x0; sLineBoxO(o + 1) = ln.y0
+        sLineBoxO(o + 2) = ln.x1; sLineBoxO(o + 3) = ln.y1
         nSLines += 1
         var k = 0
         while (k < lineTokenLen) {
-          tokSLineB += sIdx
-          tokStartB += (if (k == 0) 0 else ln.ends(k - 1))
-          tokEndB += ln.ends(k)
+          val t = currTokenIdx + k
+          tokSLine(t) = sIdx
+          tokStart(t) = if (k == 0) 0 else ln.ends(k - 1)
+          tokEnd(t) = ln.ends(k)
           k += 1
         }
         val start = currTokenIdx
@@ -389,7 +412,8 @@ object DocBuilder {
     // stored as line-buffer slice indices; the strings materialize lazily
     // in DocSample.relations (spec/golden consumers only — the engine path
     // never builds them)
-    val relSlicesB = mutable.ArrayBuilder.make[Int]
+    val relSlices = new Array[Int](4 * doc.kvEntity.length)
+    var nRel = 0
     doc.kvEntity.foreach { rel =>
       val qId = rel.fromId
       val aId = rel.toId
@@ -398,23 +422,24 @@ object DocBuilder {
           !emptyEntity.contains(qId) && !emptyEntity.contains(aId) &&
           inScopeEntityId.contains(qId) && inScopeEntityId.contains(aId)
       if (ok) {
-        relSlicesB += entityTextStart.getOrMinus1(qId)
-        relSlicesB += entityTextEnd.getOrMinus1(qId)
-        relSlicesB += entityTextStart.getOrMinus1(aId)
-        relSlicesB += entityTextEnd.getOrMinus1(aId)
+        relSlices(nRel) = entityTextStart.getOrMinus1(qId)
+        relSlices(nRel + 1) = entityTextEnd.getOrMinus1(qId)
+        relSlices(nRel + 2) = entityTextStart.getOrMinus1(aId)
+        relSlices(nRel + 3) = entityTextEnd.getOrMinus1(aId)
+        nRel += 4
       }
     }
 
     val sample = new DocSample(
       uid = doc.uid,
-      lineTextArr = lineTexts.toArray,
-      sLineText = sLineTextB.result(),
-      sLineBoxN = sLineBoxNB.result(),
-      sLineBoxO = sLineBoxOB.result(),
-      tokSLine = tokSLineB.result(),
-      tokStart = tokStartB.result(),
-      tokEnd = tokEndB.result(),
-      relSlices = relSlicesB.result(),
+      lineTextArr = if (nKept == nLines) lineTexts else java.util.Arrays.copyOf(lineTexts, nKept),
+      sLineText = trim(sLineText, nSLines),
+      sLineBoxN = trim(sLineBoxN, 4 * nSLines),
+      sLineBoxO = trim(sLineBoxO, 4 * nSLines),
+      tokSLine = trim(tokSLine, currTokenIdx),
+      tokStart = trim(tokStart, currTokenIdx),
+      tokEnd = trim(tokEnd, currTokenIdx),
+      relSlices = trim(relSlices, nRel),
       lineExtractionSpots = lineExtractionSpots.result(),
       entHeadSpots = entHeadSpots.result(),
       entTailSpots = entTailSpots.result(),
@@ -433,8 +458,9 @@ object DocBuilder {
       inScopeEntityId = asSet(inScopeEntityId),
       inScopeLineId = asSet(inScopeLineId),
       lineOrigToSorted = lineOrigToSorted.toVector.toMap,
-      sortedLines = sortedLines.map(ln => TraceLine(ln.origLineId, ln.origEntityId,
-        ln.category, ln.tokens, ln.coords, opt(ln.sortedStartToken), opt(ln.sortedEndToken)))
+      sortedLines = sortedLines.iterator.map(ln => TraceLine(ln.origLineId, ln.origEntityId,
+        ln.category, ln.tokens, Vector(ln.x0, ln.y0, ln.x1, ln.y1), opt(ln.sortedStartToken),
+        opt(ln.sortedEndToken))).toVector
     ))
     (sample, trace)
   }

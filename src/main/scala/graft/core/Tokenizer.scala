@@ -25,8 +25,11 @@ package graft.core
   */
 object Tokenizer {
 
+  // Character.isLetterOrDigit of the 128 ASCII chars, one lookup each
+  private val asciiWord: Array[Boolean] = Array.tabulate(128)(c => Character.isLetterOrDigit(c))
+
   @inline private def isCoreWordChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c)
+    if (c < 128) asciiWord(c) else Character.isLetterOrDigit(c)
 
   @inline private def isSpaceChar(c: Char): Boolean = TextNorm.pyIsSpace(c)
 

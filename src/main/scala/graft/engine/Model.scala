@@ -1,18 +1,23 @@
 package graft.engine
 
+import graft.core.DecodedDoc
+
 /** Spark-facing row types (product encoders; everything nests as
   * struct/array columns per SURVEY.md §1.2 — never RDDs, never dense
-  * matrices).
+  * matrices). Int lists are primitive arrays: the encoder copies an
+  * Array[Int] into its row in one step, where a Seq[Int] goes element by
+  * element through boxed objects. The column type (array<int> without
+  * nulls) is the same either way.
   */
 final case class PageSlim(url: String, html: Array[Byte], lang: String)
 
-final case class LineOut(text: String, box: Seq[Int])
+final case class LineOut(text: String, box: Array[Int])
 
-final case class KvOut(key: String, value: String, keyBox: Seq[Int], valueBox: Seq[Int])
+final case class KvOut(key: String, value: String, keyBox: Array[Int], valueBox: Array[Int])
 
 final case class PairOut(head: Int, tail: Int)
 
-final case class MultiOut(head: Int, tails: Seq[Int])
+final case class MultiOut(head: Int, tails: Array[Int])
 
 /** One decoded document: the engine's output row. `bucket` is the
   * deterministic resume/write unit (url-hash), `host` feeds skew handling.
@@ -35,6 +40,33 @@ final case class DocOut(
     groupHead: Seq[PairOut],
     groupTail: Seq[PairOut]
 )
+
+object DocOut {
+
+  /** The output row of one decoded document — the engine's and the
+    * golden's alike, so the two can differ only in what they decode.
+    */
+  def of(url: String, host: String, lang: String, bucket: Int, nTokens: Int,
+      kernelUs: Long, d: DecodedDoc): DocOut =
+    DocOut(
+      url = url,
+      host = host,
+      lang = lang,
+      bucket = bucket,
+      nTokens = nTokens,
+      nLines = d.lines.length,
+      nKv = d.kvPairs.length,
+      kernelUs = kernelUs,
+      text = d.extractedText,
+      lines = d.lines.map(l => LineOut(l.text, l.box.toArray)),
+      kv = d.kvPairs.map(p => KvOut(p.key, p.value, p.keyBox.toArray, p.valueBox.toArray)),
+      lineExtraction = d.lineExtraction.map(p => PairOut(p._1, p._2)),
+      entHead = d.entHead.map(m => MultiOut(m._1, m._2.toArray)),
+      entTail = d.entTail.map(m => MultiOut(m._1, m._2.toArray)),
+      groupHead = d.groupHead.map(p => PairOut(p._1, p._2)),
+      groupTail = d.groupTail.map(p => PairOut(p._1, p._2))
+    )
+}
 
 /** Per-bucket lineage row enabling checkpoint-resume (SURVEY.md §2 A8):
   * buckets are deterministic functions of url, so a re-run overwrites the

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.html.{HtmlParser, Lineizer}
@@ -26,6 +26,16 @@ object Pipeline {
 
   final val DefaultBuckets = 256
 
+  // Row encoders of the extract stages, derived once per JVM: deriving them
+  // through `spark.implicits._` reflects over the case-class TypeTags on
+  // every call, on the driver, before any task starts.
+  private lazy val pageSlimEncoder: Encoder[PageSlim] = Encoders.product[PageSlim]
+  private lazy val docOutEncoder: Encoder[DocOut] = Encoders.product[DocOut]
+  private lazy val pageDigestEncoder: Encoder[(String, Array[Byte], String, Long)] =
+    Encoders.tuple(Encoders.STRING, Encoders.BINARY, Encoders.STRING, Encoders.scalaLong)
+  private lazy val docDigestEncoder: Encoder[(DocOut, Long)] =
+    Encoders.tuple(docOutEncoder, Encoders.scalaLong)
+
   /** Cheap host extraction (no java.net.URI exceptions in the hot path). */
   def hostOf(url: String): String = {
     val schemeEnd = url.indexOf("://")
@@ -49,24 +59,8 @@ object Pipeline {
     val ann = Lineizer.lineizeStreamBytes(html, url)
     val sample = DocBuilder.build(ann)
     val d = DocBuilder.decodeSampleFast(sample)
-    DocOut(
-      url = url,
-      host = hostOf(url),
-      lang = lang,
-      bucket = bucketOf(url, buckets),
-      nTokens = sample.nTokens,
-      nLines = d.lines.length,
-      nKv = d.kvPairs.length,
-      kernelUs = (System.nanoTime() - t0) / 1000L,
-      text = d.extractedText,
-      lines = d.lines.map(l => LineOut(l.text, l.box)),
-      kv = d.kvPairs.map(p => KvOut(p.key, p.value, p.keyBox, p.valueBox)),
-      lineExtraction = d.lineExtraction.map(p => PairOut(p._1, p._2)),
-      entHead = d.entHead.map(m => MultiOut(m._1, m._2)),
-      entTail = d.entTail.map(m => MultiOut(m._1, m._2)),
-      groupHead = d.groupHead.map(p => PairOut(p._1, p._2)),
-      groupTail = d.groupTail.map(p => PairOut(p._1, p._2))
-    )
+    DocOut.of(url, hostOf(url), lang, bucketOf(url, buckets), sample.nTokens,
+      kernelUs = (System.nanoTime() - t0) / 1000L, d)
   }
 
   /** Read the pages table. Iceberg-format when a catalog table name is
@@ -92,16 +86,13 @@ object Pipeline {
   /** Main extraction stage: prune to (url, html, lang) then run the typed
     * kernel over partitions. `html` never survives this stage.
     */
-  def extract(pages: DataFrame, buckets: Int = DefaultBuckets): Dataset[DocOut] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
+  def extract(pages: DataFrame, buckets: Int = DefaultBuckets): Dataset[DocOut] =
     pages
       .select(col("url"), col("html"), col("lang"))
-      .as[PageSlim]
+      .as(pageSlimEncoder)
       .mapPartitions { it =>
         it.map(p => extractDoc(p.url, p.html, p.lang, buckets))
-      }
-  }
+      }(docOutEncoder)
 
   /** [[extract]] plus an `html_x64` column — xxhash64 of the html bytes at
     * extract time, the change-detection key [[extractIncremental]] joins
@@ -110,18 +101,15 @@ object Pipeline {
     * through `mapPartitions` beside the decoded row, so the output is
     * itself a valid `prev` for the next increment.
     */
-  def extractWithDigest(pages: DataFrame, buckets: Int = DefaultBuckets): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
+  def extractWithDigest(pages: DataFrame, buckets: Int = DefaultBuckets): DataFrame =
     pages
       .select(col("url"), col("html"), col("lang"),
         xxhash64(col("html")).as("html_x64"))
-      .as[(String, Array[Byte], String, Long)]
+      .as(pageDigestEncoder)
       .mapPartitions { it =>
         it.map { case (u, h, l, x) => (extractDoc(u, h, l, buckets), x) }
-      }
+      }(docDigestEncoder)
       .select(col("_1.*"), col("_2").as("html_x64"))
-  }
 
   /** Digest-level incremental re-extraction — the fine-grained resume the
     * bucket-level lineage gate (SURVEY A8) cannot give: when a new crawl

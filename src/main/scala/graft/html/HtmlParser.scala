@@ -77,33 +77,74 @@ object HtmlParser {
     sb.toString
   }
 
-  /** Common tag names interned by (length, first char): the hot path emits
+  /** Common tag names, interned by (length, first char): the hot path emits
     * the shared constant instead of substring+toLowerCase per element.
+    * Every tag in [[VoidTags]] and [[RawTextTags]] is here, so the byte
+    * scanner classifies an element by its id ([[commonTagId]]) alone.
     */
-  private val CommonTags: Map[(Int, Char), Array[String]] = Array(
+  private[html] val CommonTagNames: Array[String] = Array(
     "a", "p", "b", "i", "u", "br", "dd", "dt", "dl", "em", "h1", "h2", "h3",
     "h4", "h5", "h6", "hr", "li", "ol", "td", "th", "tr", "ul", "div", "img",
     "nav", "pre", "body", "form", "head", "html", "main", "span", "aside",
     "input", "label", "style", "table", "tbody", "thead", "title", "footer",
-    "header", "output", "script", "strong", "article", "section"
-  ).groupBy(t => (t.length, t.charAt(0)))
+    "header", "output", "script", "strong", "article", "section",
+    "area", "base", "col", "embed", "link", "meta", "param", "source",
+    "track", "wbr"
+  )
+  require((VoidTags ++ RawTextTags).subsetOf(CommonTagNames.toSet))
+
+  private val MaxCommonLen = CommonTagNames.map(_.length).max
+
+  /** Ids into [[CommonTagNames]] for (len, lowercased first char), indexed
+    * `len * 128 + c0` for len <= [[MaxCommonLen]] and ASCII c0 (null =
+    * none): one array read per tag, no hashing.
+    */
+  private val CommonTags: Array[Array[Int]] = {
+    val t = new Array[Array[Int]]((MaxCommonLen + 1) * 128)
+    CommonTagNames.indices.groupBy { id =>
+      val n = CommonTagNames(id)
+      n.length * 128 + n.charAt(0)
+    }.foreach { case (slot, ids) => t(slot) = ids.sorted.toArray }
+    t
+  }
+
+  @inline private def commonCands(len: Int, c0: Char): Array[Int] =
+    if (len <= MaxCommonLen && c0 < 128) CommonTags(len * 128 + c0) else null
 
   /** Lowercased tag name for html[start, end), interning common tags. */
   private[html] def tagNameOf(html: String, start: Int, end: Int): String = {
     val len = end - start
     if (len > 0) {
-      val c0 = Character.toLowerCase(html.charAt(start))
-      CommonTags.get((len, c0)) match {
-        case Some(cands) =>
-          var ci = 0
-          while (ci < cands.length) {
-            if (html.regionMatches(true, start, cands(ci), 0, len)) return cands(ci)
-            ci += 1
-          }
-        case None => ()
+      val cands = commonCands(len, Character.toLowerCase(html.charAt(start)))
+      if (cands != null) {
+        var ci = 0
+        while (ci < cands.length) {
+          val cand = CommonTagNames(cands(ci))
+          if (html.regionMatches(true, start, cand, 0, len)) return cand
+          ci += 1
+        }
       }
     }
     html.substring(start, end).toLowerCase
+  }
+
+  /** Id in [[CommonTagNames]] of the ASCII tag name b[start, end) matched
+    * case-insensitively, or -1 (empty, non-ASCII or uncommon names).
+    */
+  private[html] def commonTagId(b: Array[Byte], start: Int, end: Int): Int = {
+    val len = end - start
+    if (len <= 0 || b(start) < 0) return -1
+    val cands = commonCands(len, asciiLower(b(start)))
+    if (cands == null) return -1
+    var ci = 0
+    while (ci < cands.length) {
+      val cand = CommonTagNames(cands(ci))
+      var m = 1 // the table lookup matched the first char
+      while (m < len && asciiLower(b(start + m)) == cand.charAt(m)) m += 1
+      if (m == len) return cands(ci)
+      ci += 1
+    }
+    -1
   }
 
   /** Byte-level twin of [[tagNameOf]] for the streaming scanner: ASCII
@@ -111,36 +152,28 @@ object HtmlParser {
     * lowercase exactly like the String form.
     */
   private[html] def tagNameOfBytes(b: Array[Byte], start: Int, end: Int): String = {
+    val id = commonTagId(b, start, end)
     val len = end - start
-    if (len > 0) {
+    if (id >= 0) CommonTagNames(id)
+    else if (len <= 0) ""
+    else {
       var ascii = true
       var k = start
-      while (ascii && k < end) { if ((b(k) & 0xFF) >= 0x80) ascii = false; k += 1 }
+      while (ascii && k < end) { if (b(k) < 0) ascii = false; k += 1 }
       if (!ascii)
-        return new String(b, start, len, java.nio.charset.StandardCharsets.UTF_8).toLowerCase
-      val c0 = Character.toLowerCase((b(start) & 0xFF).toChar)
-      CommonTags.get((len, c0)) match {
-        case Some(cands) =>
-          var ci = 0
-          while (ci < cands.length) {
-            val cand = cands(ci)
-            var m = 0
-            var ok = true
-            while (ok && m < len) {
-              if (Character.toLowerCase((b(start + m) & 0xFF).toChar) != cand.charAt(m)) ok = false
-              m += 1
-            }
-            if (ok) return cand
-            ci += 1
-          }
-        case None => ()
+        new String(b, start, len, java.nio.charset.StandardCharsets.UTF_8).toLowerCase
+      else {
+        val sb = new java.lang.StringBuilder(len)
+        var m = 0
+        while (m < len) { sb.append(asciiLower(b(start + m))); m += 1 }
+        sb.toString
       }
-      val sb = new java.lang.StringBuilder(len)
-      var m = 0
-      while (m < len) { sb.append(Character.toLowerCase((b(start + m) & 0xFF).toChar)); m += 1 }
-      sb.toString
-    } else ""
+    }
   }
+
+  /** `Character.toLowerCase` of an ASCII byte. */
+  @inline private def asciiLower(c: Byte): Char =
+    if (c >= 'A' && c <= 'Z') (c + 32).toChar else c.toChar
 
   private[html] def indexOfIgnoreCase(s: String, target: String, from: Int): Int = {
     var i = math.max(0, from)

@@ -38,11 +38,14 @@ object Lineizer {
       headerLike: Boolean,
       cellTag: String, // nearest dt/dd/th/td/label/output ancestor-or-self tag, or ""
       text: String,
-      bbox: Vector[Int],
+      // the box as (left, top, right, bottom); the Vector AnnLine carries is
+      // built once, in assemble
+      x0: Int, y0: Int, x1: Int, y1: Int,
       linkDensity: Double
   )
 
   private val styleKeys = Array("left", "top", "width", "height")
+  private val styleKeyBytes = styleKeys.map(_.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
 
   /** ASCII whitespace only — Java regex `\s` = [ \t\n\x0B\f\r]. Using
     * Character.isWhitespace here would accept Unicode whitespace (U+2028
@@ -51,22 +54,25 @@ object Lineizer {
   @inline private def isAsciiSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
+  // Character.isLetterOrDigit / Character.isWhitespace of the 128 ASCII
+  // bytes, as one table lookup in the byte scanner's per-byte loops
+  private final val AsciiWord = 1
+  private final val AsciiWs = 2
+  private val asciiClass: Array[Byte] = Array.tabulate(128) { c =>
+    ((if (Character.isLetterOrDigit(c)) AsciiWord else 0) |
+      (if (Character.isWhitespace(c)) AsciiWs else 0)).toByte
+  }
+
   /** Hand-rolled equivalent of `(left|top|width|height)\s*:\s*(-?\d+)px`
     * findAllMatchIn (left-to-right, resume after each match, last match per
     * key wins). The regex was the kernel's top allocation site — Match
-    * objects per block at 10^12-doc scale; this scan allocates nothing.
+    * objects per block at 10^12-doc scale. This is the reference form the
+    * tree walk runs; the byte scanner runs [[parseStyleBoxB]].
     */
-  private def parseStyleBox(style: String): Option[Vector[Int]] =
-    parseStyleBox(style, 0, style.length)
-
-  /** Region form: parses html[from, until) in place — the streaming scanner
-    * never materializes the style attribute value. Delimiter characters at
-    * `until` can never start a key or "px", so bounded scans are safe.
-    */
-  private def parseStyleBox(style: String, from: Int, until: Int): Option[Vector[Int]] = {
+  private[html] def parseStyleBox(style: String): Option[Vector[Int]] = {
     var l, t, w, h = Integer.MIN_VALUE
-    val n = until
-    var i = from
+    val n = style.length
+    var i = 0
     while (i < n) {
       var matched = false
       var ki = 0
@@ -111,65 +117,94 @@ object Lineizer {
     else None
   }
 
-  /** Byte twin of the region [[parseStyleBox]]: keys, digits, and "px" are
+  /** Byte twin of [[parseStyleBox]]: keys, digits, and "px" are
     * ASCII, and UTF-8 continuation bytes can never alias them, so the scan
-    * runs on the raw bytes.
+    * runs on the raw bytes. It visits colons instead of trying four keys at
+    * every byte: a match needs a ':' after its key, and the key is the one
+    * ending at the last non-space before that colon. Colons in increasing
+    * order give candidate key starts in increasing order, so the first
+    * candidate that completes is the leftmost match, as in the String
+    * form, and the next search resumes after its "px". On a match the box
+    * lands in `out` as (left, top, right, bottom) and the result is true;
+    * no Option or Vector is built.
     */
-  private def parseStyleBoxB(b: Array[Byte], from: Int, until: Int): Option[Vector[Int]] = {
-    @inline def u(x: Int): Int = b(x) & 0xFF
-    def startsWith(lit: String, at: Int): Boolean = {
-      if (at + lit.length > until) return false
-      var k = 0
-      while (k < lit.length) { if (u(at + k) != lit.charAt(k)) return false; k += 1 }
-      true
+  private[html] def parseStyleBoxB(b: Array[Byte], from: Int, until: Int,
+      out: Array[Int]): Boolean = {
+    val n = until
+    // does key ki occupy b[e - len, e) with e - len >= lo?
+    def keyAt(ki: Int, e: Int, lo: Int): Boolean = {
+      val k = styleKeyBytes(ki)
+      val s = e - k.length
+      if (s < lo) return false
+      var m = 0
+      while (m < k.length && b(s + m) == k(m)) m += 1
+      m == k.length
     }
     var l, t, w, h = Integer.MIN_VALUE
-    val n = until
-    var i = from
-    while (i < n) {
-      var matched = false
-      var ki = 0
-      while (!matched && ki < 4) {
-        val k = styleKeys(ki)
-        if (startsWith(k, i)) {
-          var j = i + k.length
-          while (j < n && isAsciiSpace(u(j).toChar)) j += 1
-          if (j < n && u(j) == ':') {
-            j += 1
-            while (j < n && isAsciiSpace(u(j).toChar)) j += 1
-            var neg = false
-            if (j < n && u(j) == '-') { neg = true; j += 1 }
-            val ds = j
-            while (j < n && u(j) >= '0' && u(j) <= '9') j += 1
-            if (j > ds && j - ds <= 9 && startsWith("px", j)) {
-              var v = 0
-              var p = ds
-              while (p < j) { v = v * 10 + (u(p) - '0'); p += 1 }
-              if (neg) v = -v
-              ki match {
-                case 0 => l = v
-                case 1 => t = v
-                case 2 => w = v
-                case _ => h = v
-              }
-              i = j + 2
-              matched = true
+    var lo = from // no match may start before lo
+    var c = from
+    while (c < n) {
+      while (c < n && b(c) != ':') c += 1
+      if (c < n) {
+        var e = c
+        while (e > lo && isAsciiSpace(b(e - 1).toChar)) e -= 1
+        // no key is a suffix of another, so at most one ends at e
+        var ki = 0
+        while (ki < 4 && !keyAt(ki, e, lo)) ki += 1
+        var j = c + 1
+        var matched = false
+        if (ki < 4) {
+          while (j < n && isAsciiSpace(b(j).toChar)) j += 1
+          var neg = false
+          if (j < n && b(j) == '-') { neg = true; j += 1 }
+          val ds = j
+          var v = 0
+          while (j < n && b(j) >= '0' && b(j) <= '9') { v = v * 10 + (b(j) - '0'); j += 1 }
+          // as in the String form: at most 9 digits, then "px"
+          if (j > ds && j - ds <= 9 && j + 1 < n && b(j) == 'p' && b(j + 1) == 'x') {
+            if (neg) v = -v
+            ki match {
+              case 0 => l = v
+              case 1 => t = v
+              case 2 => w = v
+              case _ => h = v
             }
+            matched = true
           }
         }
-        ki += 1
+        if (matched) { lo = j + 2; c = lo } else c += 1
       }
-      if (!matched) i += 1
     }
     if (l != Integer.MIN_VALUE && t != Integer.MIN_VALUE &&
-      w != Integer.MIN_VALUE && h != Integer.MIN_VALUE)
-      Some(Vector(l, t, l + w, t + h))
-    else None
+      w != Integer.MIN_VALUE && h != Integer.MIN_VALUE) {
+      out(0) = l; out(1) = t; out(2) = l + w; out(3) = t + h
+      true
+    } else false
   }
 
   private val navTags = Set("nav", "footer", "aside", "header")
   private val cellTags = Set("dt", "dd", "th", "td", "label", "output")
   private val headerTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
+
+  // Class bits per HtmlParser.CommonTagNames id, derived from the sets the
+  // tree walk reads, so the byte scanner classifies an element with one
+  // array read instead of up to five set lookups. Every member of those
+  // sets is a common tag, so an uncommon name has no bits.
+  private final val TagNav = 1
+  private final val TagHdr = 2
+  private final val TagCell = 4
+  private final val TagVoid = 8
+  private final val TagRaw = 16
+  private final val TagA = 32
+  private final val TagDl = 64
+  private final val TagTr = 128
+  private val tagBits: Array[Int] = HtmlParser.CommonTagNames.map { n =>
+    def bit(on: Boolean, b: Int) = if (on) b else 0
+    bit(navTags(n), TagNav) | bit(headerTags(n), TagHdr) | bit(cellTags(n), TagCell) |
+      bit(HtmlParser.VoidTags(n), TagVoid) | bit(HtmlParser.RawTextTags(n), TagRaw) |
+      bit(n == "a", TagA) | bit(n == "dl", TagDl) | bit(n == "tr", TagTr)
+  }
+  require((navTags ++ headerTags ++ cellTags).subsetOf(HtmlParser.CommonTagNames.toSet))
 
   def lineize(root: HtmlParser.Elem, uid: String): AnnDoc = {
     val blocks = mutable.ArrayBuffer.empty[Block]
@@ -210,7 +245,7 @@ object Lineizer {
             headerLike = hdr2,
             cellTag = cell2,
             text = text,
-            bbox = box,
+            x0 = box(0), y0 = box(1), x1 = box(2), y1 = box(3),
             linkDensity = ld
           )
           true
@@ -289,28 +324,31 @@ object Lineizer {
       k += 1
     }
 
-    // --- entities with their lines (line id = document order) ---
-    val entB = Vector.newBuilder[AnnEntity]
-    entB.sizeHint(nEnt)
-    val lineGrouping = Vector.newBuilder[AnnRelation]
+    // --- entities with their lines (line id = document order), each
+    // Vector adopting an exact-size array (a VectorBuilder allocates a
+    // 32-slot node even for a one-line entity) ---
+    val entArr = new Array[AnyRef](nEnt)
+    // one grouping relation per line after the first of its entity
+    val groupArr = new Array[AnyRef](nB - nEnt)
+    var nGroup = 0
     var start = 0
     while (start < nB) {
       var end = start + 1
       while (end < nB && entityOf(end) == entityOf(start)) end += 1
-      val lines = Vector.newBuilder[AnnLine]
-      lines.sizeHint(end - start)
+      val lines = new Array[AnyRef](end - start)
       var i = start
       while (i < end) {
         val b = blocks(i)
-        lines += AnnLine(id = i, text = b.text, bbox = b.bbox)
+        lines(i - start) = AnnLine(id = i, text = b.text, bbox = Boxes.box4(b.x0, b.y0, b.x1, b.y1))
         // consecutive lines within an entity are consecutive doc-order ids
-        if (i > start) lineGrouping += AnnRelation(i - 1, i)
+        if (i > start) { groupArr(nGroup) = AnnRelation(i - 1, i); nGroup += 1 }
         i += 1
       }
-      entB += AnnEntity(id = entityOf(start), label = cats(start), lines = lines.result())
+      entArr(entityOf(start)) =
+        AnnEntity(id = entityOf(start), label = cats(start), lines = Vecs.adopt(lines))
       start = end
     }
-    val entities: Vector[AnnEntity] = entB.result()
+    val entities: Vector[AnnEntity] = Vecs.adopt(entArr)
 
     // --- KV links from DOM idioms, entity-level, first-seen order ---
     val kv = Vector.newBuilder[AnnRelation]
@@ -361,7 +399,7 @@ object Lineizer {
       height = height,
       entities = entities,
       kvEntity = kv.result(),
-      lineGrouping = lineGrouping.result()
+      lineGrouping = Vecs.adopt(groupArr)
     )
   }
 
@@ -465,7 +503,7 @@ object Lineizer {
     // whitespace (U+3000 etc.) classifies like the old char-based scan
     def wsLen(j: Int): Int = {
       val c = u(j)
-      if (c < 0x80) { if (Character.isWhitespace(c.toChar)) 1 else 0 }
+      if (c < 0x80) asciiClass(c) >> 1 // AsciiWs: 1 byte of whitespace
       else {
         val pl = cpAndLen(b, j, n)
         val cp = pl & 0x1FFFFF
@@ -521,7 +559,7 @@ object Lineizer {
     var bFor: String = null
     var bNav, bHdr = false
     var bCell = ""
-    var bBox: Vector[Int] = null
+    val bBox = new Array[Int](4)
     val bSb = new java.lang.StringBuilder
     var bFirst: String = null // first text run of the open block (fast path)
     var bLink = 0
@@ -584,7 +622,8 @@ object Lineizer {
         docOrder = blocks.length, tag = bTag, parentRef = bParentRef,
         dlRef = bDlRef, trRef = bTrRef, idAttr = bId, forAttr = bFor,
         navLike = bNav, headerLike = bHdr, cellTag = bCell,
-        text = text, bbox = bBox, linkDensity = ld)
+        text = text, x0 = bBox(0), y0 = bBox(1), x1 = bBox(2), y1 = bBox(3),
+        linkDensity = ld)
       blockOpen = false
       bFirst = null
     }
@@ -644,7 +683,7 @@ object Lineizer {
           while (!nameDone && j < n) {
             val c = u(j)
             if (c < 0x80) {
-              if (Character.isLetterOrDigit(c.toChar)) j += 1 else nameDone = true
+              if ((asciiClass(c) & AsciiWord) != 0) j += 1 else nameDone = true
             } else {
               val pl = cpAndLen(b, j, n)
               val cp = pl & 0x1FFFFF
@@ -652,7 +691,10 @@ object Lineizer {
               else nameDone = true
             }
           }
-          val name = tagNameOfB(lt + 1, j)
+          val tagId = commonTagId(b, lt + 1, j)
+          val name = if (tagId >= 0) CommonTagNames(tagId) else tagNameOfB(lt + 1, j)
+          val bits = if (tagId >= 0) tagBits(tagId) else 0
+          val isA = (bits & TagA) != 0
           if (name.isEmpty) { flushText(lt, lt + 1); i = lt + 1 }
           else {
             // reset doc-scoped attr bounds for this element
@@ -673,7 +715,7 @@ object Lineizer {
                   val c = u(j)
                   if (c == '=' || c == '>' || c == '/') keyDone = true
                   else if (c < 0x80) {
-                    if (Character.isWhitespace(c.toChar)) keyDone = true else j += 1
+                    if ((asciiClass(c) & AsciiWs) != 0) keyDone = true else j += 1
                   } else if (wsLen(j) > 0) keyDone = true
                   else j += 1
                 }
@@ -695,7 +737,7 @@ object Lineizer {
                       val c = u(j)
                       if (c == '>') vDone = true
                       else if (c < 0x80) {
-                        if (Character.isWhitespace(c.toChar)) vDone = true else j += 1
+                        if ((asciiClass(c) & AsciiWs) != 0) vDone = true else j += 1
                       } else if (wsLen(j) > 0) vDone = true
                       else j += 1
                     }
@@ -705,8 +747,8 @@ object Lineizer {
               }
             }
             i = j
-            val isRaw = RawTextTags.contains(name)
-            val isVoidLike = VoidTags.contains(name) || selfClose || isRaw
+            val isRaw = (bits & TagRaw) != 0
+            val isVoidLike = (bits & TagVoid) != 0 || selfClose || isRaw
             if (isRaw) {
               val close = "</" + name
               val end = bIndexOfCI(close, i)
@@ -724,48 +766,50 @@ object Lineizer {
               // but no refs and no nested blocks (the walk never descends)
               if (!isVoidLike) {
                 val t = fLen - 1
-                pushFrame(name, 0, isA = name == "a", isBlockRoot = false,
+                pushFrame(name, 0, isA = isA, isBlockRoot = false,
                   nav = (fBits(t) & 4) != 0, hdr = (fBits(t) & 8) != 0,
                   cell = fCell(t), dl = fDl(t), tr = fTr(t))
-                if (name == "a") aDepth += 1
+                if (isA) aDepth += 1
               }
             } else {
               elemCounter += 1
               val myRef = elemCounter
               val t = fLen - 1
-              val nav2 = (fBits(t) & 4) != 0 || navTags.contains(name)
-              val hdr2 = (fBits(t) & 8) != 0 || headerTags.contains(name)
-              val cell2 = if (cellTags.contains(name)) name else fCell(t)
-              val dl2 = if (name == "dl") myRef else fDl(t)
-              val tr2 = if (name == "tr") myRef else fTr(t)
-              // style parsed in place over the raw byte region; entity-
-              // bearing styles (never in practice) fall back to the decoded
-              // string
-              val box =
-                if (styleVs < 0) None
+              val nav2 = (fBits(t) & 4) != 0 || (bits & TagNav) != 0
+              val hdr2 = (fBits(t) & 8) != 0 || (bits & TagHdr) != 0
+              val cell2 = if ((bits & TagCell) != 0) name else fCell(t)
+              val dl2 = if ((bits & TagDl) != 0) myRef else fDl(t)
+              val tr2 = if ((bits & TagTr) != 0) myRef else fTr(t)
+              // style parsed in place over the raw byte region into bBox;
+              // entity-bearing styles (never in practice) fall back to the
+              // decoded string
+              val hasBox =
+                if (styleVs < 0) false
                 else if (hasAmp(styleVs, styleVe))
-                  parseStyleBox(decodeEntities(decodeRange(styleVs, styleVe)))
-                else parseStyleBoxB(b, styleVs, styleVe)
-              box match {
-                case Some(bx) =>
-                  bTag = name; bParentRef = fRef(t)
-                  bDlRef = dl2; bTrRef = tr2
-                  bId = { val v = matVal(idVs, idVe); if (v != null && v.nonEmpty) v else null }
-                  bFor = { val v = matVal(forVs, forVe); if (v != null && v.nonEmpty) v else null }
-                  bNav = nav2; bHdr = hdr2; bCell = cell2; bBox = bx
-                  bSb.setLength(0); bFirst = null; bLink = 0
-                  if (isVoidLike) { blockOpen = true; emitBlock() } // childless
-                  else {
-                    blockOpen = true
-                    aDepth = if (name == "a") 1 else 0
-                    pushFrame(name, myRef, isA = name == "a", isBlockRoot = true,
-                      nav = nav2, hdr = hdr2, cell = cell2, dl = dl2, tr = tr2)
+                  parseStyleBox(decodeEntities(decodeRange(styleVs, styleVe))) match {
+                    case Some(bx) =>
+                      bBox(0) = bx(0); bBox(1) = bx(1); bBox(2) = bx(2); bBox(3) = bx(3)
+                      true
+                    case None => false
                   }
-                case None =>
-                  if (!isVoidLike)
-                    pushFrame(name, myRef, isA = name == "a", isBlockRoot = false,
-                      nav = nav2, hdr = hdr2, cell = cell2, dl = dl2, tr = tr2)
-              }
+                else parseStyleBoxB(b, styleVs, styleVe, bBox)
+              if (hasBox) {
+                bTag = name; bParentRef = fRef(t)
+                bDlRef = dl2; bTrRef = tr2
+                bId = { val v = matVal(idVs, idVe); if (v != null && v.nonEmpty) v else null }
+                bFor = { val v = matVal(forVs, forVe); if (v != null && v.nonEmpty) v else null }
+                bNav = nav2; bHdr = hdr2; bCell = cell2
+                bSb.setLength(0); bFirst = null; bLink = 0
+                if (isVoidLike) { blockOpen = true; emitBlock() } // childless
+                else {
+                  blockOpen = true
+                  aDepth = if (isA) 1 else 0
+                  pushFrame(name, myRef, isA = isA, isBlockRoot = true,
+                    nav = nav2, hdr = hdr2, cell = cell2, dl = dl2, tr = tr2)
+                }
+              } else if (!isVoidLike)
+                pushFrame(name, myRef, isA = isA, isBlockRoot = false,
+                  nav = nav2, hdr = hdr2, cell = cell2, dl = dl2, tr = tr2)
             }
           }
         }

@@ -531,6 +531,17 @@ object Prep {
       key("/de/doc-1", 1, gate(":r3", 2)))
   }
 
+  // the winner key's fields, decoded here only: allow flag at byte 6,
+  // rule path from byte 8 (1-based, as SQL substring counts)
+  private def keyAllow(k: Column): Column = substring(k, 6, 1)
+  private def keyRulePath(k: Column): Column = substr(k, lit(8))
+
+  /** True iff the url's winning robots rule allows it; null (so a filter
+    * drops the row) when no rule matches.
+    */
+  private[ops] def robotsAllowed(url: Column): Column =
+    keyAllow(robotsWinnerKey(url)) === "1"
+
   def robotsRules(pages: DataFrame): DataFrame =
     pages
       .select(col("url"),
@@ -538,8 +549,8 @@ object Prep {
         robotsWinnerKey(col("url")).as("k"))
       .filter(col("k").isNotNull)
       .select(col("url"), col("host"),
-        expr("substring(k, 8)").as("rule_path"),
-        substring(col("k"), 6, 1).cast("int").as("allow"))
+        keyRulePath(col("k")).as("rule_path"),
+        keyAllow(col("k")).cast("int").as("allow"))
       .orderBy(col("url"))
 
   /** DuckDB mirror — same constructed rules, same argmax key. */

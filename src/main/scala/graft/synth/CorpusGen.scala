@@ -202,7 +202,7 @@ object CorpusGen {
 
   // ---- HTML rendering (annotation -> page) ----
 
-  private def styleOf(raw: Vector[Int]): String = {
+  private def styleOf(raw: Seq[Int]): String = {
     val b = graft.core.Boxes.boxTwoPointConvert(raw) // 8-value quads -> ltrb
     s"position:absolute;left:${b(0)}px;top:${b(1)}px;width:${b(2) - b(0)}px;height:${b(3) - b(1)}px"
   }

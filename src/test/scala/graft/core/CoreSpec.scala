@@ -67,6 +67,31 @@ class TextNormSpec extends AnyFunSuite {
     assert(TextNorm.specialReplace("ＡＢ　！") == "AB !")
     assert(TextNorm.specialReplace("Tοpic §¢") == "Topic ")
   }
+
+  test("table pyIsSpace == the character-class predicate on every char") {
+    (0 until 65536).foreach { c =>
+      assert(TextNorm.pyIsSpace(c.toChar) == TextNorm.pyIsSpaceRef(c.toChar), f"U+$c%04X")
+    }
+  }
+
+  test("one-pass specialReplace == the replacement chain applied entry by entry") {
+    // every table char, the homoglyph's letters, full-width forms, and
+    // ASCII; deletions inside and around "Tοpic" exercise the joins
+    val alphabet = Array("☐", "☑", "\uf702", "\uf703", "Tοpic", "T", "ο", "p", "i", "c",
+      "á", "é", "í", "ó", "ú", "ü", "–", "‘", "’", "“", "—", "™", "§", "¢", "Ｔ", "ｐ",
+      "　", "！", "a", " ", "x", "Topic")
+    val rng = new java.util.Random(15)
+    (0 until 20000).foreach { t =>
+      val s = Seq.fill(rng.nextInt(12))(alphabet(rng.nextInt(alphabet.length))).mkString
+      assert(TextNorm.specialReplace(s) == TextNorm.specialReplaceChain(s), s"case $t: $s")
+    }
+    Seq("Tο☐pic", "T☑ο\uf702p\uf703i☐c", "Tο§pic", "Tο¢pic", "TTοpic", "TοpTοpic", "ＴοpicTοpic",
+      "Tοpicc Tοpic", "☐").foreach { s =>
+      assert(TextNorm.specialReplace(s) == TextNorm.specialReplaceChain(s), s)
+    }
+    assert(TextNorm.specialReplace("Tο☐pic") == "Topic")
+    assert(TextNorm.specialReplace("Tο§pic") == "Tοpic")
+  }
 }
 
 class DecodeSpec extends AnyFunSuite {
@@ -207,6 +232,45 @@ class IntMapsSpec extends AnyFunSuite {
       model.foreach { case (k, v) => assert(m.getOrMinus1(k) == v) }
       assert(m.getOrMinus1(keyRange + 5) == -1)
     }
+  }
+
+  test("IntIntOrdered direct and hashed index == LinkedHashMap on dense, sparse, large and negative keys") {
+    val rng = new java.util.Random(14)
+    // key streams: small dense ids (direct index only), ids that outgrow
+    // the direct index mid-stream, sparse large keys (hashed from the first
+    // insert), and negative keys
+    val shapes: Seq[(String, Int => Int)] = Seq(
+      "dense" -> (cap => rng.nextInt(math.max(1, cap))),
+      "outgrow" -> (cap => if (rng.nextInt(10) == 0) cap + rng.nextInt(4 * cap + 8) else rng.nextInt(math.max(1, cap))),
+      "sparse" -> (_ => rng.nextInt(1 << 20) * 7),
+      "large" -> (_ => Int.MaxValue - rng.nextInt(50)),
+      "negative" -> (cap => rng.nextInt(2 * cap + 2) - cap - 1))
+    for ((shape, key) <- shapes; trial <- 0 until 40) {
+      val cap = rng.nextInt(40)
+      val m = new IntIntOrdered(cap)
+      val model = scala.collection.mutable.LinkedHashMap.empty[Int, Int]
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+      (0 until 1 + rng.nextInt(300)).foreach { _ =>
+        // re-put a seen key a third of the time
+        val k = if (seen.nonEmpty && rng.nextInt(3) == 0) seen(rng.nextInt(seen.length)) else key(cap)
+        seen += k
+        val v = rng.nextInt(1000)
+        if (rng.nextBoolean()) { m.put(k, v); model.put(k, v) }
+        else { m.putIfAbsent(k, v); if (!model.contains(k)) model.put(k, v) }
+      }
+      val ctx = s"$shape trial $trial cap $cap"
+      assert(m.toVector == model.toVector, ctx)
+      assert(m.size == model.size, ctx)
+      val pairs = Vector.newBuilder[(Int, Int)]
+      m.foreachPair((k, v) => pairs += ((k, v)))
+      assert(pairs.result() == model.toVector, ctx)
+      model.foreach { case (k, v) => assert(m.getOrMinus1(k) == v && m.contains(k), ctx) }
+      (0 until 50).map(_ => key(cap)).filterNot(model.contains).foreach { k =>
+        assert(m.getOrMinus1(k) == -1 && !m.contains(k), s"$ctx absent $k")
+      }
+    }
+    val empty = new IntIntOrdered(0)
+    assert(empty.size == 0 && !empty.contains(0) && empty.getOrMinus1(5) == -1 && empty.toVector.isEmpty)
   }
 
   test("IntBestOrdered keeps first position, strict-greater update") {

@@ -184,6 +184,106 @@ class RoundTripSpec extends AnyFunSuite {
     assert(lineTexts(html) == Vector("GOOD"))
   }
 
+  test("tag-name table == tagNameOf: common names in mixed case, non-ASCII and over-long names") {
+    def bytes(s: String) = s.getBytes("UTF-8")
+    def viaBytes(s: String) = { val b = bytes(s); HtmlParser.tagNameOfBytes(b, 0, b.length) }
+    def viaString(s: String) = HtmlParser.tagNameOf(s, 0, s.length)
+    val rng = new java.util.Random(7)
+    def mixCase(s: String) = s.map(c => if (rng.nextBoolean()) c.toUpper else c)
+    HtmlParser.CommonTagNames.zipWithIndex.foreach { case (name, id) =>
+      Seq(name, name.toUpperCase, mixCase(name), mixCase(name)).foreach { v =>
+        // interned: the table's own constant, by reference
+        assert(viaBytes(v) eq name, v)
+        assert(viaString(v) eq name, v)
+        val b = bytes(v)
+        assert(HtmlParser.commonTagId(b, 0, b.length) == id, v)
+        // in place inside a larger buffer
+        val padded = bytes(s"<$v ")
+        assert(HtmlParser.tagNameOfBytes(padded, 1, padded.length - 1) eq name, v)
+      }
+    }
+    val uncommon = Seq(
+      // over-long, and one letter off a common name at each common length
+      "sections", "articles", "DIVDIVDIVDIV", "blockquote", "x", "Q", "bx", "h7",
+      "dIx", "bodx", "asidf", "labem", "footex", "ARTICLX", "zz", "Center",
+      // non-ASCII, incl. a common name with one non-ASCII letter
+      "木", "木ab", "dív", "ÄB", "séction", "ＤＩＶ", "东京")
+    uncommon.foreach { v =>
+      val b = bytes(v)
+      assert(HtmlParser.commonTagId(b, 0, b.length) == -1, v)
+      assert(viaBytes(v) == viaString(v), v)
+      assert(viaBytes(v) == v.toLowerCase, v)
+    }
+    assert(viaBytes("") == "" && viaString("") == "")
+  }
+
+  test("byte style parser == String style parser on adversarial and random styles") {
+    def viaBytes(style: String): Option[Vector[Int]] = {
+      val b = style.getBytes("UTF-8")
+      val out = new Array[Int](4)
+      // in place inside a larger buffer, as the scanner calls it
+      val buf = "x=\"".getBytes("UTF-8") ++ b ++ "\">".getBytes("UTF-8")
+      val hit = Lineizer.parseStyleBoxB(buf, 3, 3 + b.length, out)
+      if (hit) Some(out.toVector) else None
+    }
+    val good = "left:1px;top:2px;width:3px;height:4px"
+    val adversarial = Seq(
+      good, "", "left:1px", "position:absolute;" + good,
+      "left\u2028:1px;top:2px;width:3px;height:4px", // not ASCII space
+      "left:999999999999px;top:2px;width:3px;height:4px", // > 9 digits
+      "left:123456789px;top:2px;width:3px;height:4px", // exactly 9 digits
+      "left:-5px;top:-0px;width:-3px;height:4px",
+      "left : 1px ; top:\t2px;width:\n3px;height:\r4px",
+      "LEFT:1px;top:2px;width:3px;height:4px", // keys are case-sensitive
+      "xleft:1px;xtop:2px;xwidth:3px;xheight:4px", // embedded keys match
+      "left:1px;left:9px;top:2px;width:3px;height:4px;top:7px", // last wins
+      "left:1pxtop:2pxwidth:3pxheight:4px", // adjacent matches
+      "left:1 px;top:2px;width:3px;height:4px", "left::1px;" + good,
+      "left:--1px;" + good, "left:px;" + good, "left:1p", "height:4p", good + "x",
+      "heightleft:1px;top:2px;width:3px;height:4px", "leftop:2px;left:1px;width:3px;height:4px",
+      "width:3px;height:4px;top:2px;left:1px", "top:2px;topleft:1px;width:3px;height:4px",
+      "le ft:1px;" + good, "left:1px;top:2px;wid\u00e9th:3px;height:4px",
+      "left:\u00e91px;" + good, "東京left:1px;top:2px;width:3px;height:4px東京",
+      ":" * 10 + good, "left:" + "1" * 9 + "px;" + good, "left:1px;top:2px;width:3px;height:",
+      "left&amp;:1px;" + good)
+    adversarial.foreach { st =>
+      assert(viaBytes(st) == Lineizer.parseStyleBox(st), st)
+    }
+    // random declarations, each piece of `key : -digits px ;` present or
+    // perturbed at random, so full boxes and near misses both occur
+    val rng = new java.util.Random(2026)
+    def pick(xs: String*): String = xs(rng.nextInt(xs.length))
+    def decl(): String =
+      pick("left", "top", "width", "height", "left", "top", "width", "height", "lef",
+        "heigh", "xtop", "position", "") +
+        pick("", "", " ", "\t", "\u2028") + pick(":", ":", ":", "", "::", ";") +
+        pick("", "", " ", "\u3000") + pick("", "", "", "-", "--") +
+        pick("1", "42", "907", "123456789", "1234567890", "", "é") +
+        pick("px", "px", "px", "p", "", "pxpx", "x") + pick(";", ";", "", " ", "é", "&", "t")
+    // a full box in random key order, noise declarations spliced in, and
+    // sometimes one character inserted or deleted
+    def style(): String = {
+      val full = scala.util.Random.javaRandomToRandom(rng).shuffle(Seq("left", "top", "width", "height"))
+        .map(k => s"$k${pick("", " ")}:${pick("", "-")}${rng.nextInt(2000)}px;")
+      val decls = (0 until rng.nextInt(4)).foldLeft(full)((ds, _) =>
+        ds.patch(rng.nextInt(ds.length + 1), Seq(decl()), 0))
+      val st = decls.mkString
+      rng.nextInt(4) match {
+        case 0 if st.nonEmpty => st.patch(rng.nextInt(st.length), "", 1)
+        case 1 => st.patch(rng.nextInt(st.length + 1), pick(":", "p", "x", " ", "1", "é", "t"), 0)
+        case _ => st
+      }
+    }
+    var hits = 0
+    (0 until 20000).foreach { _ =>
+      val st = style()
+      val want = Lineizer.parseStyleBox(st)
+      if (want.isDefined) hits += 1
+      assert(viaBytes(st) == want, st)
+    }
+    assert(hits > 5000 && hits < 19000, s"random styles must mix boxes and misses (got $hits)")
+  }
+
   test("stray slash inside a tag terminates (round-1 parser hung on <x</b>)") {
     // '/' at attribute-key position NOT followed by '>' must be skipped as
     // tag-soup noise, not loop forever

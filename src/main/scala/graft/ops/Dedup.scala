@@ -158,19 +158,20 @@ object Dedup {
     sqlH32(s"CAST(doc_id AS VARCHAR) || ':' || CAST($keyCol AS VARCHAR) || ':bcap'")
 
   /** DuckDB mirror of [[capBuckets]]: the semantically-equal single-window
-    * cap over a `bands(doc_id, ..., bkey)` CTE named `bandsCte`. `cols`
-    * must list doc_id plus the payload columns IN THE SPARK FRAME'S
-    * COLUMN ORDER — they double as the determinism tie-break keys.
+    * cap over a `(doc_id, ..., key)` CTE named `bandsCte`. `cols` must
+    * list doc_id plus the payload columns IN THE SPARK FRAME'S COLUMN
+    * ORDER — they double as the determinism tie-break keys.
     */
-  private[ops] def sqlCapBuckets(bandsCte: String, cols: String, cap: Int): String = {
+  private[ops] def sqlCapBuckets(bandsCte: String, cols: String, cap: Int,
+                                 key: String = "bkey"): String = {
     // NULLS FIRST on every tie-break key: Spark's ASC default ranks NULL
     // first while DuckDB's default ranks it last — a NULL payload at the
     // cap boundary would otherwise make the engines keep different rows,
     // exactly the malformed-duplicate-doc_id case this ordering defends
-    val order = (Seq(sqlCapPri("bkey")) ++ cols.split(",").map(_.trim))
+    val order = (Seq(sqlCapPri(key)) ++ cols.split(",").map(_.trim))
       .map(_ + " NULLS FIRST").mkString(", ")
-    s"""(SELECT $cols, bkey FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY bkey
+    s"""(SELECT $cols, $key FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY $key
        |      ORDER BY $order) AS rn
        |    FROM $bandsCte) WHERE rn <= $cap)""".stripMargin
   }
@@ -236,9 +237,55 @@ object Dedup {
       .distinct()
   }
 
-  /** Shared no-self-join band-pair kernel for 64-bit-signature joins
-    * ([[simhashPairs]] text, [[Media.aHashPairs]] images): capped buckets
-    * collect into bounded (doc_id, hi, lo) lists, pairs + hamming
+  /** The capped banded frame of a 64-bit signature held as two 32-bit
+    * halves (columns `hi` and `lo` of `sig`, keyed by `doc_id`): four
+    * 16-bit bands, keyed `h0:`/`h1:`/`l0:`/`l1:` plus the band value, each
+    * bucket capped by [[capBuckets]]. Pigeonhole: any pair within Hamming
+    * distance 3 shares at least one exact band, so recall up to 3 is exact
+    * up to bucket-cap eviction; a pair at distance 4 is found only if it
+    * shares a band. Output `(doc_id, hi, lo, bkey)` feeds
+    * [[bandedHammingPairs]]. ONE band layout for text simhash and the
+    * image, audio and video fingerprints; [[sqlHammingPairCtes]] mirrors it.
+    */
+  private[ops] def bandedFrame(sig: DataFrame, hi: String, lo: String,
+                               bucketCap: Int): DataFrame = {
+    val bandKeys = for ((p, c) <- Seq("h" -> hi, "l" -> lo); b <- 0 until 2)
+      yield concat(lit(s"$p$b:"),
+        shiftright(col(c), 16 * b).bitwiseAND(lit(65535L)).cast("string"))
+    capBuckets(sig.select(col("doc_id"), col(hi).as("hi"), col(lo).as("lo"),
+      explode(array(bandKeys: _*)).as("bkey")), bucketCap)
+  }
+
+  /** DuckDB mirror of [[bandedFrame]] + [[bandedHammingPairsUnordered]] as
+    * a CTE block over `sig(doc_id, <hi>, <lo>)`: the same band keys
+    * (`bands`), the cap (`capped`), and `hpairs(id_a, id_b, hamming)` —
+    * distinct bucket-mates within `maxHamming`.
+    */
+  private[ops] def sqlHammingPairCtes(sig: String, hi: String, lo: String,
+                                      maxHamming: Int, bucketCap: Int): String = {
+    val bandKeys = for ((p, c) <- Seq("h" -> hi, "l" -> lo); b <- 0 until 2)
+      yield s"'$p$b:' || (($c >> ${16 * b}) & 65535)"
+    val hamming = "bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))"
+    s"""bands AS (SELECT doc_id, $hi AS hi, $lo AS lo,
+       |    unnest([${bandKeys.mkString(", ")}]) AS bkey FROM $sig),
+       |capped AS ${sqlCapBuckets("bands", "doc_id, hi, lo", bucketCap)},
+       |hpairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+       |    CAST($hamming AS INT) AS hamming
+       |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
+       |  WHERE $hamming <= $maxHamming)""".stripMargin
+  }
+
+  /** The full pair query over [[sqlHammingPairCtes]]: `ctes` is a CTE
+    * block (without WITH) that defines `sig`.
+    */
+  private[ops] def sqlHammingPairs(ctes: String, sig: String, hi: String, lo: String,
+                                   maxHamming: Int, bucketCap: Int): String =
+    s"""WITH $ctes,
+       |${sqlHammingPairCtes(sig, hi, lo, maxHamming, bucketCap)}
+       |SELECT id_a, id_b, hamming FROM hpairs ORDER BY id_a, id_b""".stripMargin
+
+  /** Shared no-self-join band-pair kernel over a [[bandedFrame]]: capped
+    * buckets collect into bounded (doc_id, hi, lo) lists, pairs + hamming
     * (Long.bitCount over both halves == bit_count(xor)) emit in a typed
     * kernel. Guards duplicate doc_ids within a bucket (no self-pairs,
     * matching the relational a.doc_id < b.doc_id the DuckDB mirrors use).
@@ -273,12 +320,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** The full production LSH pair chain (docs -> shingles -> signatures ->
-    * bands -> capped buckets -> distinct pairs) as a CTE block exposing
-    * `lshp(id_a, id_b)` — ONE definition shared by [[lshCandidatePairsSql]]
-    * and the [[lshRecallSql]] audit so the audited path and the production
-    * path can never drift (the [[sqlDupSpanCtes]] discipline).
-    */
   /** The shingle -> signature -> band chain as a CTE block exposing
     * `bands(doc_id, bkey)` — the SQL mirror of [[minhashBandRows]], shared
     * by [[sqlLshPairCtes]] and [[incrementalGateSql]] (one definition).
@@ -296,8 +337,15 @@ object Dedup {
        |  FROM sig, generate_series(0,${k / 2 - 1}) AS t(b))""".stripMargin
   }
 
-  private def sqlLshPairCtes(table: String, k: Int, n: Int,
-                             bucketCap: Int): String = {
+  /** The full production LSH pair chain (docs -> shingles -> signatures ->
+    * bands -> capped buckets -> distinct pairs) as a CTE block exposing
+    * `lshp(id_a, id_b)` — ONE definition shared by [[lshCandidatePairsSql]],
+    * the [[lshRecallSql]] audit and the d6/p8 components mirrors, so the
+    * audited path and the production path can never drift (the
+    * [[sqlDupSpanCtes]] discipline).
+    */
+  private[ops] def sqlLshPairCtes(table: String, k: Int, n: Int,
+                                  bucketCap: Int): String = {
     s"""${sqlBandCtes(table, k, n)},
        |capped AS ${sqlCapBuckets("bands", "doc_id", bucketCap)},
        |lshp AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -449,32 +497,20 @@ object Dedup {
     grouped.select(col("doc_id"), sig("s").as("sim_lo"), sig("t").as("sim_hi"))
   }
 
-  /** SimHash near-dup pairs, Manku-style: 64-bit signature banded into
-    * four 16-bit bands (pigeonhole: any pair within hamming distance 3
-    * shares at least one exact band — so recall is EXACT for the default
-    * maxHamming UP TO bucket-cap eviction: [[capBuckets]] runs before the
-    * join, and a pair whose members are evicted from every shared bucket
-    * is lost even at hamming <= 3 — see the capBuckets recall note; the
-    * per-bucket salt makes all-bucket eviction the unlikely case rather
-    * than the guaranteed one), capped band buckets, bucket-join,
-    * verify with the summed bit_count over both halves. A 32-bit hash
-    * with 8-bit bands would make the join O(N²/1024) BY CONSTRUCTION
-    * (only 1,024 possible band keys); 16-bit bands give 65,536 keys per
-    * band and the cap bounds whatever still collides.
+  /** SimHash near-dup pairs, Manku-style: the 64-bit signature through
+    * [[bandedFrame]] (four 16-bit bands, capped buckets — recall is exact
+    * for the default maxHamming up to bucket-cap eviction; the per-bucket
+    * salt makes all-bucket eviction the unlikely case rather than the
+    * guaranteed one), bucket-join, verify with the summed bit_count over
+    * both halves. A 32-bit hash with 8-bit bands would make the join
+    * O(N²/1024) BY CONSTRUCTION (only 1,024 possible band keys); 16-bit
+    * bands give 65,536 keys per band and the cap bounds whatever still
+    * collides.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 2,
-                   bucketCap: Int = 20): DataFrame = {
-    val sig = simhash64(docs)
-    val bandKeys =
-      (0 until 2).map(b => concat(lit(s"l$b:"), shiftright(col("sim_lo"), 16 * b)
-        .bitwiseAND(lit(65535L)).cast("string"))) ++
-      (0 until 2).map(b => concat(lit(s"h$b:"), shiftright(col("sim_hi"), 16 * b)
-        .bitwiseAND(lit(65535L)).cast("string")))
-    val banded = capBuckets(
-      sig.select(col("doc_id"), col("sim_hi").as("hi"), col("sim_lo").as("lo"),
-        explode(array(bandKeys: _*)).as("bkey")), bucketCap)
-    bandedHammingPairs(banded, maxHamming)
-  }
+                   bucketCap: Int = 20): DataFrame =
+    bandedHammingPairs(bandedFrame(simhash64(docs), "sim_hi", "sim_lo", bucketCap),
+      maxHamming)
 
   def simhashPairsSql(table: String, maxHamming: Int = 2,
                       bucketCap: Int = 20): String = {
@@ -483,24 +519,13 @@ object Dedup {
       (0 until 32).map(b => s"sum(((g >> $b) & 1)*2 - 1) AS t$b")).mkString(", ")
     def sig(pfx: String) = (0 until 32)
       .map(b => s"(CASE WHEN $pfx$b >= 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
-    val bands =
-      (0 until 2).map(b => s"'l$b:' || ((sim_lo >> ${16 * b}) & 65535)") ++
-      (0 until 2).map(b => s"'h$b:' || ((sim_hi >> ${16 * b}) & 65535)")
-    s"""WITH w AS (SELECT doc_id, unnest(${sqlWords("text")}) AS word FROM $table),
-       |h AS (SELECT doc_id, ${sqlH32("word")} AS h, ${sqlH32("'x|' || word")} AS g FROM w),
-       |s AS (SELECT doc_id, $sums FROM h GROUP BY doc_id),
-       |sig AS (SELECT doc_id, CAST(${sig("s")} AS BIGINT) AS sim_lo,
-       |    CAST(${sig("t")} AS BIGINT) AS sim_hi FROM s),
-       |bands AS (SELECT doc_id, sim_lo, sim_hi,
-       |    unnest([${bands.mkString(", ")}]) AS bkey FROM sig),
-       |capped AS ${sqlCapBuckets("bands", "doc_id, sim_hi, sim_lo", bucketCap)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.sim_lo, b.sim_lo))
-       |     + bit_count(xor(a.sim_hi, b.sim_hi)) AS INT) AS hamming
-       |FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.sim_lo, b.sim_lo))
-       |    + bit_count(xor(a.sim_hi, b.sim_hi)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
+    sqlHammingPairs(
+      s"""w AS (SELECT doc_id, unnest(${sqlWords("text")}) AS word FROM $table),
+         |h AS (SELECT doc_id, ${sqlH32("word")} AS h, ${sqlH32("'x|' || word")} AS g FROM w),
+         |s AS (SELECT doc_id, $sums FROM h GROUP BY doc_id),
+         |sig AS (SELECT doc_id, CAST(${sig("s")} AS BIGINT) AS sim_lo,
+         |    CAST(${sig("t")} AS BIGINT) AS sim_hi FROM s)""".stripMargin,
+      "sig", "sim_hi", "sim_lo", maxHamming, bucketCap)
   }
 
   /** Connected components over the MinHash-LSH candidate-pair graph: the
@@ -563,12 +588,6 @@ object Dedup {
     val edges = undirected
       .union(undirected.select(col("src"), col("src").as("dst")))
       .persist()
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      System.err.println(f"[cc] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      t0 = System.nanoTime()
-    }
     var prevSum: java.math.BigDecimal = null
     var labels: DataFrame = null
     var converged = false
@@ -621,14 +640,11 @@ object Dedup {
         if (iters % 3 == 0) merged.localCheckpoint()
         else merged.persist()
       val s = labelSum(next)
-      lap(s"round $iters")
       if (labels != null) labels.unpersist()
       labels = next
       converged = s == prevSum
       prevSum = s
     }
-    if (dbg)
-      System.err.println(s"[componentsFrom] converged in $iters rounds")
     edges.unpersist()
     // re-attach the untouched singleton mass: identity components
     val out = nodes.select(col("doc_id"))
@@ -637,34 +653,27 @@ object Dedup {
     out.orderBy("doc_id")
   }
 
-  def dedupComponentsSql(table: String, k: Int = 8, n: Int = 4,
-                         bucketCap: Int = 10): String = {
-    // candidate pairs exactly as lshCandidatePairsSql (incl. the band
-    // bucket cap), then undirected min-reachable-id per node via a
-    // recursive CTE (UNION dedups -> the recursion terminates at the
-    // transitive closure)
-    val w = sqlWords("text")
-    val sh = sqlShingles("w", n)
-    val slotHash = sqlH32("h || '|' || s")
-    s"""WITH RECURSIVE docs0 AS (SELECT doc_id, $w AS w FROM $table),
-       |sh AS (SELECT doc_id, $sh AS shingles FROM docs0),
-       |sig AS (SELECT doc_id, list_transform(generate_series(0,${k - 1}),
-       |    h -> list_min(list_transform(shingles, s -> $slotHash))) AS mh
-       |  FROM sh WHERE len(shingles) > 0),
-       |bands AS (SELECT doc_id, md5(b || ':' || mh[2*b+1] || ',' || mh[2*b+2]) AS bkey
-       |  FROM sig, generate_series(0,${k / 2 - 1}) AS t(b)),
-       |capped AS ${sqlCapBuckets("bands", "doc_id", bucketCap)},
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
+  /** DuckDB mirror of [[componentsFrom]] as a CTE block (the query needs
+    * WITH RECURSIVE): `edges` holds both directions of the `pairs(id_a,
+    * id_b)` CTE, `reach(node, lbl)` is seeded with every `idCol` of
+    * `nodes` labelled by itself (UNION dedups, so the recursion terminates
+    * at the transitive closure), and `comp(node, component)` is the min
+    * reachable label per node.
+    */
+  private[ops] def sqlComponentCtes(idCol: String, nodes: String, pairs: String): String =
+    s"""edges AS (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |  UNION ALL SELECT id_b, id_a FROM $pairs),
        |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM $table
+       |  SELECT $idCol, $idCol FROM $nodes
        |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-       |SELECT node AS doc_id, min(lbl) AS component
-       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-  }
+       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+       |comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node)""".stripMargin
+
+  def dedupComponentsSql(table: String, k: Int = 8, n: Int = 4,
+                         bucketCap: Int = 10): String =
+    s"""WITH RECURSIVE ${sqlLshPairCtes(table, k, n, bucketCap)},
+       |${sqlComponentCtes("doc_id", table, "lshp")}
+       |SELECT node AS doc_id, component FROM comp ORDER BY doc_id""".stripMargin
 
   /** Leakage-safe train/test split — the assignment a training run must
     * make BEFORE holding out an eval set: a deterministic hash split at
@@ -690,11 +699,11 @@ object Dedup {
 
   def leakageSafeSplitSql(table: String, k: Int = 8, n: Int = 4,
       testPermille: Int = 100): String =
-    s"""WITH comp AS (${dedupComponentsSql(table, k, n)})
+    s"""WITH comps AS (${dedupComponentsSql(table, k, n)})
        |SELECT doc_id, component,
        |  CASE WHEN ${sqlH32("CAST(component AS VARCHAR) || ':split'")} % 1000 < $testPermille
        |    THEN 'test' ELSE 'train' END AS split
-       |FROM comp ORDER BY doc_id""".stripMargin
+       |FROM comps ORDER BY doc_id""".stripMargin
 
   /** Quality-aware canonical per near-dup cluster — what a production
     * dedup keeps: not the minimum doc_id but the HIGHEST-QUALITY member of

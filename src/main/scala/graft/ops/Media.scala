@@ -471,15 +471,14 @@ object Media {
     * same integer cross-multiplied mean test.
     */
   def aHashSql(parquetGlob: String): String =
-    s"""${aHashCte(parquetGlob)}
+    s"""WITH ${aHashCtes(parquetGlob)}
        |SELECT * FROM ah ORDER BY doc_id""".stripMargin
 
-  /** The hash recomputation as a reusable CTE chain ending in `ah`.
-    * `recursive` prefixes WITH RECURSIVE for callers whose query tail
-    * recurses ([[imageComponentsSql]]).
+  /** The hash recomputation as a reusable CTE block (without WITH) from
+    * `img` (the image rows) to `ah`.
     */
-  private def aHashCte(parquetGlob: String, recursive: Boolean = false): String =
-    s"""WITH ${if (recursive) "RECURSIVE " else ""}img AS (SELECT doc_id, payload, meta.width AS w, meta.height AS h,
+  private def aHashCtes(parquetGlob: String): String =
+    s"""img AS (SELECT doc_id, payload, meta.width AS w, meta.height AS h,
        |    ((3 * meta.width + 3) // 4) * 4 AS rowsize
        |  FROM read_parquet('$parquetGlob') WHERE kind = 'image'),
        |pxg AS (SELECT doc_id, w, h,
@@ -737,74 +736,34 @@ object Media {
        |SELECT doc_id, string_agg(CAST(v AS VARCHAR), ',' ORDER BY idx) AS gray
        |FROM cells GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** Image near-dup pairs over the perceptual hash: band the 64-bit ahash
-    * into four 16-bit bands (pigeonhole: any pair within hamming distance
-    * 3 shares at least one exact band; pairs at hamming 4 are found iff
-    * they share a band — mirrored recall, documented), capped band buckets
-    * ([[graft.ops.Dedup.capBuckets]]), bucket-join, verify with the summed
-    * bit_count over both halves — the visual analogue of the simhash text
-    * join (H3b). Eight 8-bit bands would give only 2,048 possible band
-    * keys — a join that is O(N²/bands) by construction, made worse by real
-    * image corpora concentrating on near-black/near-white hashes; 16-bit
-    * bands give 65,536 keys per band and the cap bounds the rest (a
-    * corpus-scale run of flat images all hashing to 0 stays linear).
+  /** Image near-dup pairs over the perceptual hash: the 64-bit ahash
+    * through [[Dedup.bandedFrame]] (four 16-bit bands, capped buckets),
+    * bucket-join, verify with the summed bit_count over both halves — the
+    * visual analogue of the simhash text join (H3b). The default
+    * maxHamming=3 is the 4-band pigeonhole bound, so default recall is
+    * exact up to bucket-cap eviction; callers raising maxHamming accept
+    * the mirrored band-sharing recall. Eight 8-bit bands would give only
+    * 2,048 possible band keys — a join that is O(N²/bands) by
+    * construction, made worse by real image corpora concentrating on
+    * near-black/near-white hashes; 16-bit bands give 65,536 keys per band
+    * and the cap bounds the rest (a corpus-scale run of flat images all
+    * hashing to 0 stays linear).
     */
   def aHashPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
                  bucketCap: Int = 40): DataFrame =
-    // default maxHamming=3 == the 4-band pigeonhole bound, so default
-    // recall is EXACT up to bucket-cap eviction (capBuckets runs before
-    // the join: a pair evicted from every shared bucket is lost even at
-    // hamming <= 3 — see the Dedup.capBuckets recall note; a hamming-4
-    // pair is found only if it shares a band — callers raising maxHamming
-    // accept that mirrored recall trade).
-    // Shared no-self-join pair kernel (the Dedup.simhashPairs construction)
-    Dedup.bandedHammingPairs(aHashBanded(media, bucketCap), maxHamming)
-
-  /** The capped banded-signature frame both [[aHashPairs]] and
-    * [[imageComponents]] join on — ONE definition of the band keys.
-    */
-  private def aHashBanded(media: Dataset[MediaRow], bucketCap: Int): DataFrame = {
-    val h = aHash(media)
-    val bandKeys =
-      (0 until 2).map(b => concat(lit(s"h$b:"),
-        shiftright(col("ahash_hi"), 16 * b).bitwiseAND(lit(65535L)).cast("string"))) ++
-      (0 until 2).map(b => concat(lit(s"l$b:"),
-        shiftright(col("ahash_lo"), 16 * b).bitwiseAND(lit(65535L)).cast("string")))
-    Dedup.capBuckets(
-      h.select(col("doc_id"), col("ahash_hi").as("hi"), col("ahash_lo").as("lo"),
-        explode(array(bandKeys: _*)).as("bkey")), bucketCap)
-  }
-
-  /** The band-key expressions over `ah`, as SQL (shared by the m5 pair
-    * mirror and the m7 components mirror — one definition, no drift).
-    */
-  private def aHashBandsSql: String =
-    ((0 until 2).map(b => s"'h$b:' || ((ahash_hi >> ${16 * b}) & 65535)") ++
-      (0 until 2).map(b => s"'l$b:' || ((ahash_lo >> ${16 * b}) & 65535)"))
-      .mkString(", ")
+    Dedup.bandedHammingPairs(banded(media, "image", bucketCap), maxHamming)
 
   def aHashPairsSql(parquetGlob: String, maxHamming: Int = 3,
                     bucketCap: Int = 40): String =
-    s"""${aHashCte(parquetGlob)},
-       |bands AS (SELECT doc_id, ahash_hi, ahash_lo,
-       |    unnest([$aHashBandsSql]) AS bkey FROM ah),
-       |capped AS ${graft.ops.Dedup.sqlCapBuckets("bands", "doc_id, ahash_hi, ahash_lo", bucketCap)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.ahash_hi, b.ahash_hi))
-       |     + bit_count(xor(a.ahash_lo, b.ahash_lo)) AS INT) AS hamming
-       |FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.ahash_hi, b.ahash_hi))
-       |    + bit_count(xor(a.ahash_lo, b.ahash_lo)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
+    Dedup.sqlHammingPairs(aHashCtes(parquetGlob), "ah", "ahash_hi", "ahash_lo",
+      maxHamming, bucketCap)
 
   final case class AudioFpRow(doc_id: Long, fp_hi: Long, fp_lo: Long)
 
   /** Audio near-dup pairs: the [[MediaKernel.audioFp]] fingerprint (64
     * neighbor-window energy-difference bits, map-only at input
-    * parallelism) through the SAME 4x16-bit banding, capped buckets and
-    * no-self-join pair kernel as the image (m5) and text-simhash (d5)
-    * families — near-dup detection now spans all of text, embeddings,
-    * images and audio on one shared join discipline. Recall: a
+    * parallelism) through the SAME banded frame and no-self-join pair
+    * kernel as the image (m5) and text-simhash (d5) families. Recall: a
     * single-sample edit flips at most 2 fingerprint bits (see the kernel
     * note), within the 4-band pigeonhole bound of 3, so planted
     * one-nudge duplicates are found EXACTLY (up to bucket-cap eviction —
@@ -812,82 +771,78 @@ object Media {
     */
   def audioPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
                  bucketCap: Int = 40): DataFrame =
-    Dedup.bandedHammingPairs(audioBanded(media, bucketCap), maxHamming)
+    Dedup.bandedHammingPairs(banded(media, "audio", bucketCap), maxHamming)
 
   /** Video near-dup pairs (m12) — the third modality on the SAME banded
-    * join discipline: the fingerprint is the 8x8 block aHash of the
-    * TEMPORAL-SUM frame (per-pixel sums over all frames; skipping the
-    * per-frame mean keeps the block test `bs*px > total*bc` exact — the
-    * mean would divide every term by nf uniformly, so the sums give the
-    * identical bit pattern with no flooring), then the m5/m10 4x16-bit
-    * bands, capped buckets, no-self-join pair kernel.
+    * join: the fingerprint is the 8x8 block aHash of the TEMPORAL-SUM frame
+    * (per-pixel sums over all frames; skipping the per-frame mean keeps
+    * the block test `bs*px > total*bc` exact — the mean would divide every
+    * term by nf uniformly, so the sums give the identical bit pattern with
+    * no flooring).
     */
   def videoPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
                  bucketCap: Int = 40): DataFrame =
-    Dedup.bandedHammingPairs(videoBanded(media, bucketCap), maxHamming)
+    Dedup.bandedHammingPairs(banded(media, "video", bucketCap), maxHamming)
 
-  private def videoBanded(media: Dataset[MediaRow], bucketCap: Int): DataFrame = {
+  /** The (doc_id, fp_hi, fp_lo) fingerprint frame of one clip kind. */
+  private def fingerprints(media: Dataset[MediaRow], kind: String,
+                           fp: Array[Byte] => (Long, Long)): DataFrame = {
     import media.sparkSession.implicits._
-    val h = media.filter(_.kind == "video").mapPartitions(_.map { r =>
-      val (hi, lo) = MediaKernel.videoFp(r.media)
+    media.filter(_.kind == kind).mapPartitions(_.map { r =>
+      val (hi, lo) = fp(r.media)
       AudioFpRow(r.doc_id, hi, lo)
     }).toDF()
-    val bandKeys =
-      (0 until 2).map(b => concat(lit(s"h$b:"),
-        shiftright(col("fp_hi"), 16 * b).bitwiseAND(lit(65535L)).cast("string"))) ++
-      (0 until 2).map(b => concat(lit(s"l$b:"),
-        shiftright(col("fp_lo"), 16 * b).bitwiseAND(lit(65535L)).cast("string")))
-    Dedup.capBuckets(
-      h.select(col("doc_id"), col("fp_hi").as("hi"), col("fp_lo").as("lo"),
-        explode(array(bandKeys: _*)).as("bkey")), bucketCap)
   }
 
-  /** Video near-dup CLUSTERS — closing the pairs→clusters symmetry for
-    * every modality (text d6, embeddings s6, images m7, audio m11, video
-    * m13) on the one shared [[Dedup.componentsFrom]] propagation core;
-    * nodes are all video rows so no-dup clips stay singletons.
+  /** The capped banded frame of one media kind's 64-bit signature. */
+  private def banded(media: Dataset[MediaRow], kind: String, bucketCap: Int): DataFrame =
+    kind match {
+      case "image" => Dedup.bandedFrame(aHash(media), "ahash_hi", "ahash_lo", bucketCap)
+      case "audio" => Dedup.bandedFrame(
+        fingerprints(media, kind, MediaKernel.audioFp), "fp_hi", "fp_lo", bucketCap)
+      case "video" => Dedup.bandedFrame(
+        fingerprints(media, kind, MediaKernel.videoFp), "fp_hi", "fp_lo", bucketCap)
+    }
+
+  /** Near-dup CLUSTERS of one media kind: connected components over its
+    * banded pair graph through the shared [[Dedup.componentsFrom]]
+    * min-label propagation core (bounded-lineage fixpoint, O(1) decimal
+    * convergence test). Nodes are ALL rows of the kind (a narrow
+    * kind-pruned doc_id scan), so items with no near-dup stay singleton
+    * components. The pair leg uses the UNORDERED kernel — no
+    * operator-embedded global sort enters the fixpoint loop's plan.
     */
-  def videoComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame = {
-    val nodes = media.toDF().filter(col("kind") === "video").select(col("doc_id"))
+  private def components(media: Dataset[MediaRow], kind: String, maxHamming: Int,
+                         bucketCap: Int, maxIters: Int): DataFrame = {
+    val nodes = media.toDF().filter(col("kind") === kind).select(col("doc_id"))
     val pairs = Dedup
-      .bandedHammingPairsUnordered(videoBanded(media, bucketCap), maxHamming)
+      .bandedHammingPairsUnordered(banded(media, kind, bucketCap), maxHamming)
       .select(col("id_a"), col("id_b"))
     Dedup.componentsFrom(nodes, pairs, maxIters)
   }
 
-  /** DuckDB mirror of [[videoComponents]]: the m12 fingerprint chain, the
-    * same pair predicate, then recursive-CTE reachability with min-label
-    * per node (the d6/s6/m7/m11 oracle idiom).
-    */
-  def videoComponentsSql(parquetGlob: String, maxHamming: Int = 3,
-                         bucketCap: Int = 40): String = {
-    val pairsSql = videoPairsSql(parquetGlob, maxHamming, bucketCap)
-    // reuse the full pairs query as a nested subquery (WITH-in-subquery),
-    // keeping ONE definition of the fingerprint + band chain
-    s"""WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM (
-       |$pairsSql
-       |)),
-       |vnodes AS (SELECT doc_id FROM read_parquet('$parquetGlob')
-       |  WHERE kind = 'video'),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM vnodes
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-       |SELECT node AS doc_id, min(lbl) AS component
-       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-  }
+  /** Image near-dup CLUSTERS over the [[aHashPairs]] graph (m7). */
+  def imageComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
+                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
+    components(media, "image", maxHamming, bucketCap, maxIters)
 
-  /** DuckDB mirror of [[videoPairs]]: the fingerprint recomputed from the
-    * write-side frame truth (per-pixel temporal sums, the engine's block
-    * geometry, the same cross-multiplied mean test), then the shared
-    * band / cap / join / bit_count chain.
+  /** Audio near-dup CLUSTERS over the [[audioPairs]] graph (m11). */
+  def audioComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
+                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
+    components(media, "audio", maxHamming, bucketCap, maxIters)
+
+  /** Video near-dup CLUSTERS over the [[videoPairs]] graph (m13). */
+  def videoComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
+                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
+    components(media, "video", maxHamming, bucketCap, maxIters)
+
+  /** The video fingerprint recomputed from the write-side frame truth
+    * (per-pixel temporal sums, the engine's block geometry, the same
+    * cross-multiplied mean test) as a CTE chain from `v` (the video rows)
+    * to `ah(doc_id, fp_hi, fp_lo)`.
     */
-  def videoPairsSql(parquetGlob: String, maxHamming: Int = 3,
-                    bucketCap: Int = 40): String =
-    s"""WITH v AS (SELECT doc_id, payload, meta.width AS fw, meta.height AS fh,
+  private def videoFpCtes(parquetGlob: String): String =
+    s"""v AS (SELECT doc_id, payload, meta.width AS fw, meta.height AS fh,
        |    meta.width * meta.height AS px,
        |    length(payload) // (meta.width * meta.height) AS nf
        |  FROM read_parquet('$parquetGlob') WHERE kind = 'video'),
@@ -917,49 +872,13 @@ object Media {
        |    THEN 1::BIGINT << (k - 32) END), 0) AS BIGINT) AS fp_hi,
        |  CAST(COALESCE(sum(CASE WHEN bit = 1 AND k < 32
        |    THEN 1::BIGINT << k END), 0) AS BIGINT) AS fp_lo
-       |  FROM kb GROUP BY doc_id),
-       |bands AS (SELECT doc_id, fp_hi, fp_lo,
-       |    unnest([$audioBandsSql]) AS bkey FROM ah),
-       |capped AS ${Dedup.sqlCapBuckets("bands", "doc_id, fp_hi, fp_lo", bucketCap)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.fp_hi, b.fp_hi))
-       |     + bit_count(xor(a.fp_lo, b.fp_lo)) AS INT) AS hamming
-       |FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.fp_hi, b.fp_hi))
-       |    + bit_count(xor(a.fp_lo, b.fp_lo)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
+       |  FROM kb GROUP BY doc_id)""".stripMargin
 
-  private def audioFingerprint(media: Dataset[MediaRow]): DataFrame = {
-    import media.sparkSession.implicits._
-    media.filter(_.kind == "audio").mapPartitions(_.map { r =>
-      val (hi, lo) = MediaKernel.audioFp(r.media)
-      AudioFpRow(r.doc_id, hi, lo)
-    }).toDF()
-  }
-
-  private def audioBanded(media: Dataset[MediaRow], bucketCap: Int): DataFrame = {
-    val h = audioFingerprint(media)
-    val bandKeys =
-      (0 until 2).map(b => concat(lit(s"h$b:"),
-        shiftright(col("fp_hi"), 16 * b).bitwiseAND(lit(65535L)).cast("string"))) ++
-      (0 until 2).map(b => concat(lit(s"l$b:"),
-        shiftright(col("fp_lo"), 16 * b).bitwiseAND(lit(65535L)).cast("string")))
-    Dedup.capBuckets(
-      h.select(col("doc_id"), col("fp_hi").as("hi"), col("fp_lo").as("lo"),
-        explode(array(bandKeys: _*)).as("bkey")), bucketCap)
-  }
-
-  private def audioBandsSql: String =
-    ((0 until 2).map(b => s"'h$b:' || ((fp_hi >> ${16 * b}) & 65535)") ++
-      (0 until 2).map(b => s"'l$b:' || ((fp_lo >> ${16 * b}) & 65535)"))
-      .mkString(", ")
-
-  /** Shared fingerprint + band + cap CTE chain (through `capped`) for the
-    * audio pair/components oracles — recomputes the fingerprint from
-    * write-side sample truth (window energies via list slices over the
-    * payload string).
+  /** The audio fingerprint recomputed from write-side sample truth
+    * (window energies via list slices over the payload string) as a CTE
+    * chain from `au` (the audio rows) to `ah(doc_id, fp_hi, fp_lo)`.
     */
-  private def audioCappedCte(parquetGlob: String, bucketCap: Int): String =
+  private def audioFpCtes(parquetGlob: String): String =
     s"""au AS (SELECT doc_id, payload, length(payload) AS n
        |  FROM read_parquet('$parquetGlob') WHERE kind = 'audio'),
        |ew AS (SELECT doc_id, n,
@@ -977,100 +896,41 @@ object Media {
        |    THEN 1::BIGINT << (w - 32) END), 0) AS BIGINT) AS fp_hi,
        |  CAST(COALESCE(sum(CASE WHEN bit = 1 AND w < 32
        |    THEN 1::BIGINT << w END), 0) AS BIGINT) AS fp_lo
-       |  FROM bits GROUP BY doc_id),
-       |bands AS (SELECT doc_id, fp_hi, fp_lo,
-       |    unnest([$audioBandsSql]) AS bkey FROM ah),
-       |capped AS ${Dedup.sqlCapBuckets("bands", "doc_id, fp_hi, fp_lo", bucketCap)}""".stripMargin
+       |  FROM bits GROUP BY doc_id)""".stripMargin
 
-  /** DuckDB mirror of [[audioPairs]]: the shared fingerprint chain, then
-    * the same band / cap / join / bit_count predicate as [[aHashPairsSql]].
-    */
+  /** DuckDB mirror of [[audioPairs]]. */
   def audioPairsSql(parquetGlob: String, maxHamming: Int = 3,
                     bucketCap: Int = 40): String =
-    s"""WITH ${audioCappedCte(parquetGlob, bucketCap)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.fp_hi, b.fp_hi))
-       |     + bit_count(xor(a.fp_lo, b.fp_lo)) AS INT) AS hamming
-       |FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.fp_hi, b.fp_hi))
-       |    + bit_count(xor(a.fp_lo, b.fp_lo)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
+    Dedup.sqlHammingPairs(audioFpCtes(parquetGlob), "ah", "fp_hi", "fp_lo",
+      maxHamming, bucketCap)
 
-  /** Audio near-dup CLUSTERS — the fourth modality of the pairs→clusters
-    * family (text d6, embeddings s6, images m7): connected components over
-    * the [[audioPairs]] graph through the SHARED
-    * [[Dedup.componentsFrom]] min-label propagation core. Nodes are all
-    * audio rows, so clips with no near-dup stay singleton components; the
-    * pair leg is the UNORDERED kernel (no operator-embedded sort enters
-    * the fixpoint loop).
-    */
-  def audioComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame = {
-    val nodes = media.toDF().filter(col("kind") === "audio").select(col("doc_id"))
-    val pairs = Dedup
-      .bandedHammingPairsUnordered(audioBanded(media, bucketCap), maxHamming)
-      .select(col("id_a"), col("id_b"))
-    Dedup.componentsFrom(nodes, pairs, maxIters)
-  }
+  /** DuckDB mirror of [[videoPairs]]. */
+  def videoPairsSql(parquetGlob: String, maxHamming: Int = 3,
+                    bucketCap: Int = 40): String =
+    Dedup.sqlHammingPairs(videoFpCtes(parquetGlob), "ah", "fp_hi", "fp_lo",
+      maxHamming, bucketCap)
 
-  /** DuckDB mirror of [[audioComponents]]: the shared fingerprint chain,
-    * the m10 pair predicate, then recursive-CTE reachability with
-    * min-label per node (the d6/s6/m7 oracle idiom).
+  /** DuckDB mirror of [[components]]: a signature CTE chain ending in
+    * `ah`, the shared band / cap / Hamming pair CTEs, then recursive-CTE
+    * reachability with min-label per node seeded from `nodes`.
     */
-  def audioComponentsSql(parquetGlob: String, maxHamming: Int = 3,
-                         bucketCap: Int = 40): String =
-    s"""WITH RECURSIVE ${audioCappedCte(parquetGlob, bucketCap)},
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.fp_hi, b.fp_hi))
-       |      + bit_count(xor(a.fp_lo, b.fp_lo)) <= $maxHamming),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM au
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-       |SELECT node AS doc_id, min(lbl) AS component
-       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
+  private def componentsSql(ctes: String, nodes: String, hi: String, lo: String,
+                            maxHamming: Int, bucketCap: Int): String =
+    s"""WITH RECURSIVE $ctes,
+       |${Dedup.sqlHammingPairCtes("ah", hi, lo, maxHamming, bucketCap)},
+       |${Dedup.sqlComponentCtes("doc_id", nodes, "hpairs")}
+       |SELECT node AS doc_id, component FROM comp ORDER BY doc_id""".stripMargin
 
-  /** Image near-dup CLUSTERS: connected components over the [[aHashPairs]]
-    * graph — the visual member of the pairs→clusters family (text d6,
-    * embeddings s6), sharing [[Dedup.componentsFrom]]'s min-label
-    * propagation core (bounded-lineage fixpoint, O(1) decimal convergence
-    * test). Nodes are ALL image rows (a narrow kind-pruned doc_id scan), so
-    * images with no near-dup stay singleton components. The pair leg uses
-    * the UNORDERED kernel — no operator-embedded global sort enters the
-    * fixpoint loop's plan.
-    */
-  def imageComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame = {
-    val nodes = media.toDF().filter(col("kind") === "image").select(col("doc_id"))
-    val pairs = Dedup
-      .bandedHammingPairsUnordered(aHashBanded(media, bucketCap), maxHamming)
-      .select(col("id_a"), col("id_b"))
-    Dedup.componentsFrom(nodes, pairs, maxIters)
-  }
-
-  /** DuckDB mirror of [[imageComponents]]: the shared hash + band CTEs,
-    * the m5 pair predicate, then recursive-CTE reachability (the d6/s6
-    * oracle idiom) with min-label per node.
-    */
   def imageComponentsSql(parquetGlob: String, maxHamming: Int = 3,
                          bucketCap: Int = 40): String =
-    s"""${aHashCte(parquetGlob, recursive = true)},
-       |bands AS (SELECT doc_id, ahash_hi, ahash_lo,
-       |    unnest([$aHashBandsSql]) AS bkey FROM ah),
-       |capped AS ${graft.ops.Dedup.sqlCapBuckets("bands", "doc_id, ahash_hi, ahash_lo", bucketCap)},
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.ahash_hi, b.ahash_hi))
-       |      + bit_count(xor(a.ahash_lo, b.ahash_lo)) <= $maxHamming),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM img
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-       |SELECT node AS doc_id, min(lbl) AS component
-       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
+    componentsSql(aHashCtes(parquetGlob), "img", "ahash_hi", "ahash_lo",
+      maxHamming, bucketCap)
+
+  def audioComponentsSql(parquetGlob: String, maxHamming: Int = 3,
+                         bucketCap: Int = 40): String =
+    componentsSql(audioFpCtes(parquetGlob), "au", "fp_hi", "fp_lo", maxHamming, bucketCap)
+
+  def videoComponentsSql(parquetGlob: String, maxHamming: Int = 3,
+                         bucketCap: Int = 40): String =
+    componentsSql(videoFpCtes(parquetGlob), "v", "fp_hi", "fp_lo", maxHamming, bucketCap)
 }

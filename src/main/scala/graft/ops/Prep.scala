@@ -542,6 +542,13 @@ object Prep {
   private[ops] def robotsAllowed(url: Column): Column =
     keyAllow(robotsWinnerKey(url)) === "1"
 
+  /** Winning robots rule per page row: (url, host, rule_path, allow) for
+    * every row whose url matches at least one rule.
+    *
+    * Precondition: urls are unique in `pages`. This emits one row per
+    * input row, while [[robotsRulesSql]] groups by (url, host), so a url
+    * that appears twice yields two rows here and one in the mirror.
+    */
   def robotsRules(pages: DataFrame): DataFrame =
     pages
       .select(col("url"),
@@ -972,11 +979,6 @@ object Prep {
       defaultRate: Double = 0.35, capPerSource: Int = 30,
       budget: Long = 256L, targetPerShard: Long = 1000000L,
       k: Int = 8, n: Int = 4, bucketCap: Int = 10): String = {
-    val w = sqlWords("text")
-    val sh = sqlShingles("w", n)
-    val slotHash = sqlH32("h || '|' || s")
-    val bpri = Dedup.sqlCapPri("bkey")
-    val spri = Dedup.sqlCapPri("source")
     val nShards = shardsForSql("samp", targetPerShard)
     val rateCase = rates.map { case (l, r) => s"WHEN lang = '$l' THEN ${(r * 1e6).toLong}" }
       .mkString("CASE ", " ", s" ELSE ${(defaultRate * 1e6).toLong} END")
@@ -986,33 +988,11 @@ object Prep {
        |exsurv AS (SELECT d.doc_id, d.lang, d.source, d.text
        |  FROM $table d JOIN firsts f
        |  ON md5(d.text) IS NOT DISTINCT FROM f.th AND d.doc_id = f.canonical),
-       |docs0 AS (SELECT doc_id, $w AS w FROM exsurv),
-       |sh AS (SELECT doc_id, $sh AS shingles FROM docs0),
-       |sig AS (SELECT doc_id, list_transform(generate_series(0,${k - 1}),
-       |    h -> list_min(list_transform(shingles, s -> $slotHash))) AS mh
-       |  FROM sh WHERE len(shingles) > 0),
-       |bands AS (SELECT doc_id, md5(b || ':' || mh[2*b+1] || ',' || mh[2*b+2]) AS bkey
-       |  FROM sig, generate_series(0,${k / 2 - 1}) AS t(b)),
-       |cappedb AS (SELECT doc_id, bkey FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY bkey ORDER BY $bpri, doc_id) AS rn
-       |    FROM bands) WHERE rn <= $bucketCap),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM cappedb a JOIN cappedb b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM exsurv
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-       |comp AS (SELECT node AS doc_id, min(lbl) AS component
-       |  FROM reach GROUP BY node),
+       |${Dedup.sqlLshPairCtes("exsurv", k, n, bucketCap)},
+       |${Dedup.sqlComponentCtes("doc_id", "exsurv", "lshp")},
        |canon AS (SELECT e.* FROM exsurv e
-       |  JOIN comp c ON e.doc_id = c.doc_id WHERE c.component = e.doc_id),
-       |scap AS (SELECT doc_id, lang, text FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY source
-       |      ORDER BY $spri NULLS FIRST, doc_id NULLS FIRST,
-       |        lang NULLS FIRST, text NULLS FIRST) AS rn
-       |    FROM canon) WHERE rn <= $capPerSource),
+       |  JOIN comp c ON e.doc_id = c.node WHERE c.component = e.doc_id),
+       |scap AS ${Dedup.sqlCapBuckets("canon", "doc_id, lang, text", capPerSource, key = "source")},
        |samp AS (SELECT doc_id, lang, text FROM scap
        |  WHERE ${sqlH32("CAST(doc_id AS VARCHAR) || ':mix1'")} % 1000000
        |    < ($rateCase)),

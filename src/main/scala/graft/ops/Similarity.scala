@@ -50,7 +50,7 @@ object Similarity {
     emb.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
 
   /** Sign-bit LSH bucket id of an embedding column (shared by lshBuckets and
-    * the hot-cell sub-bucketing of cosineNearDupPairs).
+    * the hot-cell sub-bucketing of [[cellPairs]]).
     */
   private def bucketCol(embedding: Column): Column =
     (0 until NumPlanes).map { p =>
@@ -58,104 +58,97 @@ object Similarity {
       when(d >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** Embedding near-dup: within-cell pairs with cosine >= thresh.
+  /** SQL mirror of [[bucketCol]] over a column named `embedding`. */
+  private lazy val sqlBucket: String = (0 until NumPlanes).map { p =>
+    val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
+      s"i -> CAST(embedding[i] AS DOUBLE) * (${planes(p).mkString("[", ",", "]")})[i]), (x,y) -> x+y)"
+    s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
+  }.mkString("CAST(", " + ", " AS BIGINT)")
+
+  /** Within-cell cosine pairs, unordered: `(id_a, id_b, cos)` with
+    * id_a < id_b in the same `cell` and cos >= thresh, over `emb(vec_id,
+    * embedding, nrm, cell)`. The one pair join of s1, s6 and s9.
     *
-    * Skew guard: a hot cell (label with > cellCap members) would make the
+    * Skew guard: a hot cell (more than cellCap members) would make the
     * within-cell pair join quadratic ON THE SKEW KEY. Cells above the cap
     * are therefore sub-bucketed by the 8-plane LSH signature — candidates
-    * become (label, bucket) pairs, an expected ~256x reduction per hot cell
+    * become (cell, bucket) pairs, an expected ~256x reduction per hot cell
     * — at the documented cost of missing near-dup pairs that straddle a
     * hyperplane inside a hot cell. Cell sizes come from a map-side partial
     * aggregate broadcast back, so the guard adds no extra full shuffle.
     */
-  def cosineNearDupPairs(
-      emb: DataFrame,
-      thresh: Double = 0.3,
-      cellCap: Int = 10000
-  ): DataFrame = {
-    val sizes = broadcast(emb.groupBy(col("label")).agg(count(lit(1)).as("cell_n")))
-    val keyed = withNorm(emb)
-      .join(sizes, "label")
+  private def cellPairs(emb: DataFrame, cell: String, thresh: Double,
+                        cellCap: Int): DataFrame = {
+    val sizes = broadcast(emb.groupBy(col(cell)).agg(count(lit(1)).as("cell_n")))
+    val keyed = emb.join(sizes, cell)
       .withColumn("jk",
         when(col("cell_n") > cellCap,
-          concat_ws(":", lit("H"), col("label"), bucketCol(col("embedding"))))
-          .otherwise(concat_ws(":", lit("L"), col("label"))))
+          concat_ws(":", lit("H"), col(cell), bucketCol(col("embedding"))))
+          .otherwise(concat_ws(":", lit("L"), col(cell))))
     val a = keyed.as("a")
     val b = keyed.as("b")
     val cos = dot(col("a.embedding"), col("b.embedding")) / (col("a.nrm") * col("b.nrm"))
     a.join(b, col("a.jk") === col("b.jk") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), cos.as("cos"))
       .filter(col("cos") >= thresh)
-      .select(col("id_a"), col("id_b"), micro(col("cos")).as("cos_micro"))
-      .orderBy("id_a", "id_b")
   }
 
-  def cosineNearDupPairsSql(table: String, thresh: Double = 0.3, cellCap: Int = 10000): String = {
-    def lits(p: Int): String = planes(p).mkString("[", ",", "]")
-    val bits = (0 until NumPlanes).map { p =>
-      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * (${lits(p)})[i]), (x,y) -> x+y)"
-      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH sz AS (SELECT label, count(*) AS cell_n FROM $table GROUP BY label),
-       |k AS (SELECT e.vec_id, e.embedding, e.label,
+  /** DuckDB mirror of [[cellPairs]] as a CTE block over `src(vec_id,
+    * embedding, <cell>)`: cell sizes `sz`, join keys `kc`, and the pairs
+    * `cp(id_a, id_b, cos)`.
+    */
+  private def sqlCellPairCtes(src: String, cell: String, thresh: Double,
+                              cellCap: Int): String =
+    s"""sz AS (SELECT $cell, count(*) AS cell_n FROM $src GROUP BY $cell),
+       |kc AS (SELECT e.vec_id, e.embedding,
        |    CASE WHEN sz.cell_n > $cellCap
-       |      THEN 'H:' || e.label || ':' || CAST($bits AS BIGINT)
-       |      ELSE 'L:' || e.label END AS jk
-       |  FROM $table e JOIN sz ON e.label = sz.label),
-       |p AS (
+       |      THEN 'H:' || e.$cell || ':' || $sqlBucket
+       |      ELSE 'L:' || e.$cell END AS jk
+       |  FROM $src e JOIN sz ON e.$cell = sz.$cell),
+       |cp AS (SELECT * FROM (
        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        |    ${sqlCosine("a.embedding", "b.embedding", Dim)} AS cos
-       |  FROM k a JOIN k b
-       |    ON a.jk = b.jk AND a.vec_id < b.vec_id)
-       |SELECT id_a, id_b, ${sqlMicro("cos")} AS cos_micro FROM p
-       |WHERE cos >= $thresh ORDER BY id_a, id_b""".stripMargin
-  }
+       |  FROM kc a JOIN kc b
+       |    ON a.jk = b.jk AND a.vec_id < b.vec_id) WHERE cos >= $thresh)""".stripMargin
+
+  /** Embedding near-dup: within-label pairs with cosine >= thresh, hot
+    * labels sub-bucketed ([[cellPairs]]).
+    */
+  def cosineNearDupPairs(
+      emb: DataFrame,
+      thresh: Double = 0.3,
+      cellCap: Int = 10000
+  ): DataFrame =
+    cellPairs(withNorm(emb), "label", thresh, cellCap)
+      .select(col("id_a"), col("id_b"), micro(col("cos")).as("cos_micro"))
+      .orderBy("id_a", "id_b")
+
+  def cosineNearDupPairsSql(table: String, thresh: Double = 0.3, cellCap: Int = 10000): String =
+    s"""WITH ${sqlCellPairCtes(table, "label", thresh, cellCap)}
+       |SELECT id_a, id_b, ${sqlMicro("cos")} AS cos_micro FROM cp
+       |ORDER BY id_a, id_b""".stripMargin
 
   /** Embedding near-dup CLUSTERS: connected components over the
     * within-cell cosine pair graph (the similarity-family analogue of
     * [[Dedup.dedupComponents]] — one canonical vector per duplicate
-    * cluster). Same min-label propagation core; same hot-cell guard.
+    * cluster). Same min-label propagation core; same hot-cell guard; the
+    * pair leg is unordered, so no global sort enters the fixpoint loop.
     */
   def embedComponents(
       emb: DataFrame,
       thresh: Double = 0.3,
       cellCap: Int = 10000
   ): DataFrame = {
-    val pairs = cosineNearDupPairs(emb, thresh, cellCap)
+    val pairs = cellPairs(withNorm(emb), "label", thresh, cellCap)
       .select(col("id_a"), col("id_b"))
     Dedup.componentsFrom(emb.select(col("vec_id").as("doc_id")), pairs, maxIters = 20)
       .select(col("doc_id").as("vec_id"), col("component"))
   }
 
-  def embedComponentsSql(table: String, thresh: Double = 0.3, cellCap: Int = 10000): String = {
-    def lits(p: Int): String = planes(p).mkString("[", ",", "]")
-    val bits = (0 until NumPlanes).map { p =>
-      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * (${lits(p)})[i]), (x,y) -> x+y)"
-      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH RECURSIVE sz AS (SELECT label, count(*) AS cell_n FROM $table GROUP BY label),
-       |k AS (SELECT e.vec_id, e.embedding, e.label,
-       |    CASE WHEN sz.cell_n > $cellCap
-       |      THEN 'H:' || e.label || ':' || CAST($bits AS BIGINT)
-       |      ELSE 'L:' || e.label END AS jk
-       |  FROM $table e JOIN sz ON e.label = sz.label),
-       |p AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    ${sqlCosine("a.embedding", "b.embedding", Dim)} AS cos
-       |  FROM k a JOIN k b
-       |    ON a.jk = b.jk AND a.vec_id < b.vec_id),
-       |pair AS (SELECT id_a, id_b FROM p WHERE cos >= $thresh),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pair
-       |  UNION ALL SELECT id_b, id_a FROM pair),
-       |reach(node, lbl) AS (
-       |  SELECT vec_id, vec_id FROM $table
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-       |SELECT node AS vec_id, min(lbl) AS component
-       |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
-  }
+  def embedComponentsSql(table: String, thresh: Double = 0.3, cellCap: Int = 10000): String =
+    s"""WITH RECURSIVE ${sqlCellPairCtes(table, "label", thresh, cellCap)},
+       |${Dedup.sqlComponentCtes("vec_id", table, "cp")}
+       |SELECT node AS vec_id, component FROM comp ORDER BY vec_id""".stripMargin
 
   /** Skew-safe per-query top-k: the two-stage idiom ([[Prep.hostCap]]).
     * A single `row_number() OVER (PARTITION BY q_id)` would shuffle the
@@ -965,20 +958,7 @@ object Similarity {
       .withColumn("cid",
         argminStruct(cents, col("q"), col("sq")).getField("cid"))
       .drop("q", "sq")
-    val sizes = broadcast(e.groupBy(col("cid")).agg(count(lit(1)).as("cell_n")))
-    val keyed = e.join(sizes, "cid")
-      .withColumn("jk",
-        when(col("cell_n") > cellCap,
-          concat_ws(":", lit("H"), col("cid"), bucketCol(col("embedding"))))
-          .otherwise(concat_ws(":", lit("L"), col("cid"))))
-    val a = keyed.as("a")
-    val b = keyed.as("b")
-    val cos = dot(col("a.embedding"), col("b.embedding")) / (col("a.nrm") * col("b.nrm"))
-    val pairs = a
-      .join(b, col("a.jk") === col("b.jk") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), cos.as("cos"))
-      .filter(col("cos") >= thresh)
-      .select(col("id_a"), col("id_b"))
+    val pairs = cellPairs(e, "cid", thresh, cellCap).select(col("id_a"), col("id_b"))
     val comp = Dedup
       .componentsFrom(emb.select(col("vec_id").as("doc_id")), pairs, maxIters = 20)
       .select(col("doc_id").as("vec_id"), col("component"))
@@ -1008,38 +988,15 @@ object Similarity {
     * chains; the keep rule is the same two-stage max-then-min-tie form.
     */
   def semDedupSql(table: String, kCentroids: Int = 4, rounds: Int = 2,
-                  thresh: Double = 0.3, cellCap: Int = 10000): String = {
-    def lits(p: Int): String = planes(p).mkString("[", ",", "]")
-    val bits = (0 until NumPlanes).map { p =>
-      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * (${lits(p)})[i]), (x,y) -> x+y)"
-      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
+                  thresh: Double = 0.3, cellCap: Int = 10000): String =
     s"""WITH RECURSIVE ${kmeansWithBody(table, kCentroids, rounds)},
-       |sz AS (SELECT cid, count(*) AS cell_n FROM asg GROUP BY cid),
-       |kk AS (SELECT t.vec_id, t.embedding, a.cid,
-       |    CASE WHEN sz.cell_n > $cellCap
-       |      THEN 'H:' || a.cid || ':' || CAST($bits AS BIGINT)
-       |      ELSE 'L:' || a.cid END AS jk
-       |  FROM $table t JOIN asg a ON t.vec_id = a.vec_id
-       |  JOIN sz ON a.cid = sz.cid),
-       |p AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    ${sqlCosine("a.embedding", "b.embedding", Dim)} AS cos
-       |  FROM kk a JOIN kk b
-       |    ON a.jk = b.jk AND a.vec_id < b.vec_id),
-       |pair AS (SELECT id_a, id_b FROM p WHERE cos >= $thresh),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pair
-       |  UNION ALL SELECT id_b, id_a FROM pair),
-       |reach(node, lbl) AS (
-       |  SELECT vec_id, vec_id FROM $table
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-       |comp AS (SELECT node AS vec_id, min(lbl) AS component
-       |  FROM reach GROUP BY node),
-       |tg AS (SELECT c.vec_id, a.cid, c.component,
+       |ec AS (SELECT t.vec_id, t.embedding, a.cid
+       |  FROM $table t JOIN asg a ON t.vec_id = a.vec_id),
+       |${sqlCellPairCtes("ec", "cid", thresh, cellCap)},
+       |${Dedup.sqlComponentCtes("vec_id", table, "cp")},
+       |tg AS (SELECT c.node AS vec_id, a.cid, c.component,
        |    CAST(a.dist AS BIGINT) AS dist_mic2
-       |  FROM comp c JOIN asg a ON c.vec_id = a.vec_id),
+       |  FROM comp c JOIN asg a ON c.node = a.vec_id),
        |bd AS (SELECT component, max(dist_mic2) AS bd FROM tg GROUP BY component),
        |kp AS (SELECT tg.component, min(tg.vec_id) AS keep_id
        |  FROM tg JOIN bd ON tg.component = bd.component
@@ -1048,7 +1005,6 @@ object Similarity {
        |  CAST(CASE WHEN tg.vec_id = kp.keep_id THEN 1 ELSE 0 END AS INTEGER) AS kept
        |FROM tg JOIN kp ON tg.component = kp.component
        |ORDER BY tg.vec_id""".stripMargin
-  }
 
   /** Random-hyperplane LSH bucket assignment: 8 sign bits -> bucket id.
     * Pure narrow projection (the scale path: bucket-join for candidates).
@@ -1056,13 +1012,6 @@ object Similarity {
   def lshBuckets(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), bucketCol(col("embedding")).as("bucket")).orderBy("vec_id")
 
-  def lshBucketsSql(table: String): String = {
-    def lits(p: Int): String = planes(p).mkString("[", ",", "]")
-    val bits = (0 until NumPlanes).map { p =>
-      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * (${lits(p)})[i]), (x,y) -> x+y)"
-      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    s"SELECT vec_id, CAST($bits AS BIGINT) AS bucket FROM $table ORDER BY vec_id"
-  }
+  def lshBucketsSql(table: String): String =
+    s"SELECT vec_id, $sqlBucket AS bucket FROM $table ORDER BY vec_id"
 }

@@ -93,7 +93,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("d2/d5/m5/m10 band joins: buckets capped via the staged group-limit (never uncapped self-join)") {
     Seq("d2_minhash_lsh", "d5_simhash_pairs", "m5_ahash_pairs",
-        "m10_audio_pairs").foreach { q =>
+        "m10_audio_pairs", "m12_video_pairs").foreach { q =>
       val p = plan(q)
       // the capped band frame feeds BOTH legs of the self-join, so the
       // two-stage cap shows up once (reused exchange) or twice (2 or 4
@@ -107,6 +107,12 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
         s"$q band join must stay an equi-join:\n$p")
     }
+  }
+
+  test("registry: every query has a DuckDB oracle and every oracle a query") {
+    // the oracle compare iterates oracleSql, so a query missing from it
+    // would never be checked
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   test("t-block text analysis ops are shuffle-free narrow projections") {

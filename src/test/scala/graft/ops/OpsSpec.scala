@@ -252,6 +252,28 @@ class OpsSpec extends AnyFunSuite {
     assert(!m.keySet.exists(p => p._1 == 3L || p._2 == 3L), "unrelated doc must not pair")
   }
 
+  test("bandedFrame: 4x16-bit pigeonhole — Hamming 3 across three bands found, 4 across all bands not") {
+    import spark.implicits._
+    // two groups whose band values never meet, so only in-group pairs can
+    // share a bucket; the cap is far above every bucket's size
+    val b = 0x0F0F0F0FL
+    val sig = Seq(
+      (1L, 0L, 0L),
+      // top bit of a band: a band layout that overlaps or skips bits
+      // changes which bands these flips land in
+      (2L, 0x80008000L, 0x00008000L), // flips in bands h0, h1, l0; l1 shared
+      (3L, b, b),
+      (4L, b ^ 0x80008000L, b ^ 0x80008000L) // one flip in every band
+    ).toDF("doc_id", "h", "l")
+    val framed = Dedup.bandedFrame(sig, "h", "l", bucketCap = 1000)
+    assert(framed.columns.toSeq == Seq("doc_id", "hi", "lo", "bkey"))
+    assert(framed.count() == 16, "four band rows per signature")
+    val pairs = Dedup.bandedHammingPairs(framed, maxHamming = 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(pairs == Seq((1L, 2L, 3)),
+      s"Hamming 3 sharing band l1 must pair; Hamming 4 sharing no band must not: $pairs")
+  }
+
   test("ngram jaccard: identical docs score exactly 1.0 (1e6 micro)") {
     val rows = Dedup.jaccardPairs(dupDocs, thresh = 0.2).collect()
     val m = rows.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Long]("jac_micro")).toMap
